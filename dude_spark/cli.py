@@ -1408,9 +1408,10 @@ def main(argv: list[str] | None = None) -> int:
                     f"--input {a.input} has no usable embeddings"
                 )
             store = ParquetManifestStore(spark, a.index_dir)
-            # data first, manifest last: a crash between the two leaves
-            # an index ann-query REFUSES (no manifest), never a stale
-            # half-index served silently
+            # withdraw the old manifest, data, publish last: a crash in a
+            # (re)build leaves an index ann-query REFUSES (no manifest),
+            # never a stale half-index served silently
+            store.clear_manifest("ann_cells")
             assigned = store.write(
                 ann_assign(embs, cent, a.assign_cells, a.id_col, a.vec_col),
                 "ann_cells",

@@ -121,7 +121,6 @@ class JobConfig:
     paranoid: bool = True                  # ≅ ParanoidMode — verify stage on
     cpus: int = 0                          # ≅ CPUs (0 → all available)
     buf_size: int = DEFAULT_BUF_SIZE       # ≅ BufSize → Arrow batch rows
-    debug: bool = False                    # ≅ DebugMode
     detectors: tuple[str, ...] = ("exact",)  # subset of {exact,minhash,simhash,suffix}
     # id dictionary encoding (operators/ids.py): "auto" turns the
     # string→dense-long key mapping on when the input reaches
@@ -134,7 +133,6 @@ class JobConfig:
     id_encoding: str = "auto"
     id_encoding_min_rows: int = 100_000
     bucket_cap: int = 64                   # max bucket size fully paired (then chained)
-    salt_buckets: int = 16                 # salt fan-out for hot keys
     run_id: str = "run"
     minhash: MinHashConfig = dataclasses.field(default_factory=MinHashConfig)
     simhash: SimHashConfig = dataclasses.field(default_factory=SimHashConfig)

@@ -5,13 +5,13 @@ pipeline chains a fixed subset in a fixed order.  ``curate`` runs that
 chain — filter → pii-scrub → dedup (exact + fuzzy n-gram Jaccard →
 connected components → representative-keep) → decontaminate (optional)
 → domain mix (optional) → training shards — through the same
-StageStore manifest machinery the dedup pipeline uses
-(``pipeline.py``), so the chain is RESUMABLE MID-RUN: every stage
-materializes under ``<workdir>/stages/<name>`` with a manifest keyed
-by that stage's config hash, a re-run skips every completed stage
-whose config matches, and a flag change invalidates exactly the
-stages it affects (and therefore everything downstream of them, since
-downstream config ids fold in upstream ones).
+``storage.StageRunner`` the dedup pipeline uses (``pipeline.py``), so
+the chain is RESUMABLE MID-RUN: every stage materializes under
+``<workdir>/stages/<name>`` with a manifest keyed by the stage's own
+params, the input fingerprint and its upstream stages' keys.  A re-run
+skips every completed stage whose key matches; a new input recomputes
+every stage, and a flag change invalidates exactly the stage it
+affects and everything downstream of it.
 
 Every destructive stage leaves a durable audit under
 ``<workdir>/audits/`` — rejected rows with reasons, PII rewrite
@@ -34,68 +34,17 @@ the curation surface the north star mandates.
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .storage import ParquetManifestStore, StageStore
+from .storage import StageRunner, StageStore, frame_fingerprint
 
 
-def _cfg_id(**kw) -> str:
-    """Deterministic stage-config hash (the JobConfig.config_id shape)."""
-    return hashlib.sha256(
-        json.dumps(kw, sort_keys=True, default=str).encode()
-    ).hexdigest()[:16]
-
-
-class CurateRunner:
-    """Minimal manifest-keyed stage runner (the pipeline.StageRunner
-    skip contract, without its detector-thread machinery)."""
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        workdir: str,
-        resume: bool = True,
-        store: StageStore | None = None,
-    ):
-        self.spark, self.workdir, self.resume = spark, workdir, resume
-        self.store = store or ParquetManifestStore(spark, workdir)
-        self.report: dict[str, dict] = {}
-
-    def run(self, stage: str, config_id: str, compute) -> DataFrame:
-        m = self.store.manifest(stage)
-        if (
-            self.resume
-            and m is not None
-            and m.get("config_id") == config_id
-            and self.store.exists(stage)
-        ):
-            self.report[stage] = {"rows": m["rows"], "skipped": True}
-            return self.store.read(stage)
-        t0 = time.monotonic()
-        out = self.store.write(compute(), stage)
-        rows = out.count()
-        self.store.publish_manifest(
-            stage,
-            {
-                "stage": stage,
-                "config_id": config_id,
-                "rows": rows,
-                "wall_s": time.monotonic() - t0,
-            },
-        )
-        self.report[stage] = {"rows": rows, "skipped": False}
-        return out
-
-    def audit(self, name: str, df: DataFrame) -> None:
-        df.write.mode("overwrite").parquet(
-            os.path.join(self.workdir, "audits", name)
-        )
+def _audit(workdir: str, name: str, df: DataFrame) -> None:
+    df.write.mode("overwrite").parquet(os.path.join(workdir, "audits", name))
 
 
 def curate(
@@ -136,7 +85,18 @@ def curate(
     from .operators.shards import verify_shards, write_training_shards
     from .operators.textdedup import ngram_jaccard_pairs
 
-    runner = CurateRunner(spark, workdir, resume=resume, store=store)
+    runner = StageRunner(
+        spark, workdir, frame_fingerprint(spark, docs), run_id="curate",
+        resume=resume, store=store,
+    )
+    report: dict[str, dict] = {}
+
+    def run(stage: str, compute, params=None, upstream=()) -> DataFrame:
+        out = runner.run(stage, compute, params, upstream)
+        info = runner.stages[stage]
+        report[stage] = {"rows": info.rows, "skipped": info.skipped}
+        return out
+
     canon = docs
     if id_col != "image_id":
         canon = canon.withColumnRenamed(id_col, "image_id")
@@ -144,34 +104,28 @@ def curate(
         canon = canon.withColumnRenamed(text_col, "caption")
 
     # 1 — quality filter (rejected rows + reasons are the audit)
-    c_filter = _cfg_id(stage="filter", langs=allowed_langs)
-
     def _filter():
         clean, rejected = filter_corpus(
             canon, text_col="caption", allowed_langs=allowed_langs
         )
-        runner.audit("rejected", rejected)
+        _audit(workdir, "rejected", rejected)
         return clean
 
-    filtered = runner.run("filtered", c_filter, _filter)
+    filtered = run(
+        "filtered", _filter,
+        {"langs": allowed_langs, "id_col": id_col, "text_col": text_col},
+    )
 
     # 2 — PII scrub (audit = per-touched-doc signal counts)
-    c_pii = _cfg_id(stage="pii", upstream=c_filter)
-
     def _pii():
         scrubbed, audit = scrub_pii(filtered, "caption", "image_id")
-        runner.audit("pii", audit)
+        _audit(workdir, "pii", audit)
         return scrubbed
 
-    scrubbed = runner.run("pii", c_pii, _pii)
+    scrubbed = run("pii", _pii, upstream=("filtered",))
 
     # 3 — dedup: exact (sha2 of text) + fuzzy (n-gram Jaccard) edges →
     # connected components → keep each cluster's min-id representative
-    c_dedup = _cfg_id(
-        stage="dedup", upstream=c_pii, ngram=ngram,
-        num=jaccard_num, den=jaccard_den, max_gram_df=max_gram_df,
-    )
-
     def _dedup():
         base = scrubbed.localCheckpoint(eager=True)  # feeds 3 consumers
         exact_b = base.where(
@@ -189,35 +143,38 @@ def curate(
         )
         edges = e_pairs.select("a", "b").unionByName(fuzzy.select("a", "b"))
         assigns = connected_components(edges).localCheckpoint(eager=True)
-        runner.audit("dedup_assignments", assigns)
-        runner.audit("dedup_overcap", overcap)
+        _audit(workdir, "dedup_assignments", assigns)
+        _audit(workdir, "dedup_overcap", overcap)
         return dedup_corpus(base, assigns, "image_id")
 
-    deduped = runner.run("deduped", c_dedup, _dedup)
+    current = run(
+        "deduped", _dedup,
+        {"ngram": ngram, "num": jaccard_num, "den": jaccard_den,
+         "max_gram_df": max_gram_df},
+        upstream=("pii",),
+    )
+    last = "deduped"
 
     # 4 — decontamination vs a benchmark set (optional)
-    current = deduped
     if benchmark is not None:
-        c_dec = _cfg_id(stage="decontam", upstream=c_dedup)
+        deduped = current
 
         def _dec():
             clean, flagged = decontaminate(deduped, benchmark)
-            runner.audit("decontam_flagged", flagged)
+            _audit(workdir, "decontam_flagged", flagged)
             return clean
 
-        current = runner.run("decontam", c_dec, _dec)
+        current = run(
+            "decontam", _dec,
+            {"benchmark": frame_fingerprint(spark, benchmark)},
+            upstream=(last,),
+        )
+        last = "decontam"
     else:
-        runner.report["decontam"] = {"rows": None, "skipped": "no benchmark"}
+        report["decontam"] = {"rows": None, "skipped": "no benchmark"}
 
     # 5 — domain mix (optional)
     if mix_weights is not None:
-        c_mix = _cfg_id(
-            stage="mix",
-            upstream=runner.store.manifest(
-                "decontam" if benchmark is not None else "deduped"
-            )["config_id"],
-            weights=mix_weights,
-        )
         src = current
 
         def _mix():
@@ -231,9 +188,14 @@ def curate(
             return mixed
 
         os.makedirs(os.path.join(workdir, "audits"), exist_ok=True)
-        current = runner.run("mixed", c_mix, _mix)
+        current = run(
+            "mixed", _mix,
+            {"weights": mix_weights, "source_col": source_col},
+            upstream=(last,),
+        )
+        last = "mixed"
     else:
-        runner.report["mixed"] = {"rows": None, "skipped": "no mix weights"}
+        report["mixed"] = {"rows": None, "skipped": "no mix weights"}
 
     # 6 — training shards (manifest-after-data + verification)
     final = current
@@ -246,35 +208,30 @@ def curate(
     # empty parquet dir that the verification read cannot even infer a
     # schema from — report loudly instead of crashing (the chain's
     # audits say exactly where the rows went)
-    last = [v["rows"] for v in runner.report.values() if v.get("rows") is not None]
-    if last and last[-1] == 0:
-        runner.report["shards"] = {
+    if runner.stages[last].rows == 0:
+        runner.flush()
+        report["shards"] = {
             "rows": 0,
             "skipped": "upstream corpus is empty — nothing to shard",
         }
         return {
-            "stages": runner.report,
+            "stages": report,
             "shards": 0,
             "shard_verification_failures": 0,
             "workdir": workdir,
         }
-    # the shard config folds in every upstream stage's row count, so
-    # any upstream recompute (or flag change) re-shards
-    c_sh = _cfg_id(
-        stage="shards",
-        rows_per_shard=rows_per_shard,
-        upstream={k: v.get("rows") for k, v in runner.report.items()},
-    )
-    manifest = runner.run(
+    manifest = run(
         "shards",
-        c_sh,
         lambda: write_training_shards(
             final, shards_dir, rows_per_shard, id_col=id_col
         ),
+        {"rows_per_shard": rows_per_shard},
+        upstream=(last,),
     )
+    runner.flush()
     bad = verify_shards(spark, shards_dir, id_col=id_col).count()
     return {
-        "stages": runner.report,
+        "stages": report,
         "shards": manifest.count(),
         "shard_verification_failures": bad,
         "workdir": workdir,

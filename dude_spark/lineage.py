@@ -24,7 +24,6 @@ land next to the original run's, keyed by run_id + stage.
 
 from __future__ import annotations
 
-import datetime as _dt
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -39,21 +38,11 @@ LINEAGE_SCHEMA = (
 )
 
 
-def partition_counts(df: DataFrame) -> DataFrame:
-    """(partition_id, rows) of df's current physical partitioning."""
-    return (
-        df.withColumn("partition_id", F.spark_partition_id())
-        .groupBy("partition_id")
-        .agg(F.count("*").alias("rows"))
-    )
-
-
 def partition_count_rows(df: DataFrame) -> list[tuple[int, int]]:
-    """Collected (partition_id, rows) — tiny (≤ #partitions rows)."""
-    return [
-        (int(r["partition_id"]), int(r["rows"]))
-        for r in partition_counts(df).collect()
-    ]
+    """Collected (partition_id, rows) of df's current physical
+    partitioning — tiny (≤ #partitions rows)."""
+    counts = df.groupBy(F.spark_partition_id().alias("p")).count()
+    return [(int(r["p"]), int(r["count"])) for r in counts.collect()]
 
 
 def flush_records(
@@ -91,45 +80,6 @@ def flush_records(
         spark.createDataFrame(lpdf, LINEAGE_SCHEMA).coalesce(1).write.mode(
             "append"
         ).parquet(os.path.join(checkpoint_dir, "lineage"))
-
-
-def record_stage(
-    spark: SparkSession,
-    checkpoint_dir: str,
-    run_id: str,
-    stage: str,
-    detector: str,
-    rows_out: int,
-    wall_s: float,
-    extra: dict[str, str] | None = None,
-    stage_output: DataFrame | None = None,
-) -> None:
-    """Append one run_metrics row and (if given a materialized stage
-    output) its per-partition lineage rows."""
-    import pandas as pd
-
-    ts = _dt.datetime.now(_dt.timezone.utc).isoformat()
-    metrics = spark.createDataFrame(
-        pd.DataFrame(
-            [(run_id, stage, detector, rows_out, float(wall_s), ts, extra or {})],
-            columns=["run_id", "stage", "detector", "rows_out", "wall_s", "ts", "extra"],
-        ),
-        METRICS_SCHEMA,
-    )
-    metrics.coalesce(1).write.mode("append").parquet(
-        os.path.join(checkpoint_dir, "run_metrics")
-    )
-    if stage_output is not None:
-        lineage = partition_counts(stage_output).select(
-            F.lit(run_id).alias("run_id"),
-            F.lit(stage).alias("stage"),
-            F.lit(detector).alias("detector"),
-            F.col("partition_id").cast("int"),
-            F.col("rows").cast("long"),
-        )
-        lineage.coalesce(1).write.mode("append").parquet(
-            os.path.join(checkpoint_dir, "lineage")
-        )
 
 
 def read_metrics(spark: SparkSession, checkpoint_dir: str) -> DataFrame:

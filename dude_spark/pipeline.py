@@ -7,8 +7,9 @@ candidate pairs → verify → connected components → report.  Three
 generalizations mandated by the north star:
 
   * every stage materializes to a checkpoint directory with a sidecar
-    manifest keyed by the detector's ``config_id`` — a re-run skips
-    every completed stage whose config matches ("resumes idempotently
+    manifest keyed by its own params, the input fingerprint and its
+    upstream stages' keys (``storage.StageRunner``) — a re-run skips
+    every completed stage whose key matches ("resumes idempotently
     mid-run"; generalizes DuDe's row cache, hashing.go:84-116, from
     rows to stages);
   * per-partition lineage rows + stage metrics append to durable
@@ -38,8 +39,6 @@ from __future__ import annotations
 
 import dataclasses
 import os
-import threading
-import time
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
@@ -50,22 +49,18 @@ from .detectors import exact as d_exact
 from .detectors import minhash as d_minhash
 from .detectors import simhash as d_simhash
 from .detectors import suffix as d_suffix
-import datetime as _dt
-
-from .lineage import flush_records, partition_count_rows
 from .operators.candidates import pairs_from_buckets
 from .operators.components import connected_components
 from .operators.ids import decode_keys, encode_ids, encode_keys
 from .operators.report import assignments_to_report, write_csv_report
 from .operators.verify import prefilter_minhash, verify_exact, verify_jaccard
-from .storage import ParquetManifestStore, StageStore
-
-
-@dataclasses.dataclass
-class StageInfo:
-    rows: int
-    wall_s: float
-    skipped: bool
+from .storage import (  # noqa: F401 — CancelledRun re-exported for callers
+    CancelledRun,
+    StageInfo,
+    StageRunner,
+    StageStore,
+    input_fingerprint,
+)
 
 
 @dataclasses.dataclass
@@ -78,10 +73,6 @@ class PipelineResult:
 
 def _job_group(run_id: str) -> str:
     return f"dude_spark::{run_id}"
-
-
-class CancelledRun(RuntimeError):
-    """Raised in the driver when a run is cancelled mid-flight."""
 
 
 def cancel_run(
@@ -103,52 +94,6 @@ def cancel_run(
         with open(os.path.join(checkpoint_dir, "CANCEL"), "w") as f:
             f.write(run_id)
     spark.sparkContext.cancelJobGroup(_job_group(run_id))
-
-
-def input_fingerprint(spark: SparkSession, cfg: JobConfig) -> str:
-    """Fingerprint of the input tables: sha256 over sorted
-    (path, size, mtime) of every file under each input root — the
-    direct analogue of the reference's per-file (FileSize, ModTime)
-    cache probe (hashing.go:73-88) lifted to the table level.  Stage
-    manifests embed this so a changed/extended input invalidates stage
-    skips while `use_cache` still reuses unchanged rows.  On Iceberg
-    this is the table's snapshot id.
-
-    Listings go through the Hadoop FileSystem API, so remote schemes
-    the CLI advertises (s3://, hdfs://) fingerprint correctly instead
-    of silently hashing nothing (round-1 ADVICE: a driver-local
-    os.walk returned a constant hash for remote paths, so a changed
-    input no longer invalidated a resume).  A root with zero files
-    raises — an empty fingerprint must never validate a resume.
-    Metadata-only: one listing RPC stream per root, no data reads.
-    """
-    import hashlib
-
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    h = hashlib.sha256()
-    for root in cfg.input_paths:
-        path = jvm.org.apache.hadoop.fs.Path(root)
-        fs = path.getFileSystem(hconf)
-        if not fs.exists(path):
-            raise FileNotFoundError(f"input root does not exist: {root}")
-        entries = []
-        it = fs.listFiles(path, True)  # recursive; a plain file lists itself
-        while it.hasNext():
-            st = it.next()
-            entries.append(
-                f"{st.getPath().toString()}|{st.getLen()}"
-                f"|{st.getModificationTime()}\n"
-            )
-        if not entries:
-            raise ValueError(
-                f"input root {root} contains no files — refusing to "
-                "fingerprint an empty input (it would validate stale "
-                "stage checkpoints on resume)"
-            )
-        for e in sorted(entries):
-            h.update(e.encode())
-    return h.hexdigest()[:16]
 
 
 def load_images(spark: SparkSession, cfg: JobConfig) -> DataFrame:
@@ -204,7 +149,7 @@ def _buckets(signatures: DataFrame, detector: str, cfg: JobConfig) -> DataFrame:
 def _verify_is_noop(detector: str, cfg: JobConfig) -> bool:
     """True when _verify returns its input unchanged — the ONE source
     of truth for both _verify's early return and compute_edges'
-    decode/encode-sandwich skip (and the edges stage key tag)."""
+    decode/encode-sandwich skip (and the edges stage's key params)."""
     return detector == "exact" and not cfg.paranoid
 
 
@@ -241,79 +186,6 @@ def _verify(
     raise ValueError(detector)
 
 
-# ------------------------------------------------------------- checkpointing
-
-class _Stages:
-    """Checkpointed stage runner over a pluggable StageStore
-    (storage.py — parquet+manifest in the sandbox, Iceberg tables on a
-    cluster; the seam is the interface, not prose)."""
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        cfg: JobConfig,
-        resume: bool,
-        store: StageStore | None = None,
-    ):
-        self.spark, self.cfg, self.resume = spark, cfg, resume
-        self.root = cfg.checkpoint_dir
-        self.store = store or ParquetManifestStore(spark, cfg.checkpoint_dir)
-        self.stages: dict[str, StageInfo] = {}
-        # buffered durable records, flushed once at pipeline end
-        # (2 writes per run instead of 2 per stage)
-        self.metrics_rows: list[tuple] = []
-        self.lineage_rows: list[tuple] = []
-        self._lock = threading.Lock()  # detector chains run concurrently
-
-    def flush(self) -> None:
-        flush_records(self.spark, self.root, self.metrics_rows, self.lineage_rows)
-        self.metrics_rows, self.lineage_rows = [], []
-
-    def run(
-        self, stage: str, detector: str, config_id: str, compute
-    ) -> DataFrame:
-        # sticky-cancel check at every stage boundary (≅ ctx polls,
-        # reference hashing.go:58-70) — see cancel_run
-        if os.path.exists(os.path.join(self.root, "CANCEL")):
-            raise CancelledRun(f"run cancelled before stage {stage}")
-        if self.resume:
-            m = self.store.manifest(stage)
-            if (
-                m is not None
-                and m.get("config_id") == config_id
-                and self.store.exists(stage)
-            ):
-                with self._lock:
-                    self.stages[stage] = StageInfo(m["rows"], 0.0, skipped=True)
-                return self.store.read(stage)
-            # config changed → cached stage is invalid, fall through
-        t0 = time.monotonic()
-        out = self.store.write(compute(), stage)
-        pc = partition_count_rows(out)  # one cheap count-per-partition job
-        rows = sum(n for _, n in pc)
-        wall = time.monotonic() - t0
-        self.store.publish_manifest(
-            stage,
-            {
-                "run_id": self.cfg.run_id,
-                "stage": stage,
-                "config_id": config_id,
-                "rows": rows,
-                "wall_s": wall,
-            },
-        )
-        ts = _dt.datetime.now(_dt.timezone.utc).isoformat()
-        with self._lock:
-            self.metrics_rows.append(
-                (self.cfg.run_id, stage, detector, rows, float(wall), ts, {})
-            )
-            self.lineage_rows.extend(
-                (self.cfg.run_id, stage, detector, pid, n) for pid, n in pc
-            )
-            self.stages[stage] = StageInfo(rows, wall, skipped=False)
-        return out
-
-
 def _incremental_signatures(
     spark: SparkSession,
     images: DataFrame,
@@ -325,7 +197,7 @@ def _incremental_signatures(
     """Row-level MERGE of new/changed signatures with the cached table.
 
     ≅ fileNeedsReHashing = !memoryExists || fileHasChangedOnDisk
-    (hashing.go:84-88) as one left join; unchanged rows keep their
+    (hashing.go:84-88) as one anti join; unchanged rows keep their
     cached signature without re-running the signature UDF.
     """
     fp = images.withColumn("row_fp", _row_fp(detector))
@@ -354,12 +226,11 @@ def _incremental_signatures(
     cached = cached.localCheckpoint(eager=True)
     current = fp.select("image_id", "row_fp")
     unchanged = cached.join(current, ["image_id", "row_fp"])  # semi via inner
+    # anti join, one row per current image: the cache holds one row per
+    # signature (simhash: per channel), so a left join would re-sign a
+    # changed image once per cached row and duplicate it in the merge
     stale_ids = current.join(
-        cached.select("image_id", F.col("row_fp").alias("cached_fp")),
-        "image_id",
-        "left",
-    ).where(
-        F.col("cached_fp").isNull() | (F.col("cached_fp") != F.col("row_fp"))
+        cached.select("image_id", "row_fp"), ["image_id", "row_fp"], "left_anti"
     ).select("image_id")
     fresh_rows = images.join(stale_ids, "image_id")
     fresh = _signatures(fresh_rows, detector, cfg).join(
@@ -403,15 +274,9 @@ def run_pipeline(
     cfg = cfg.validated()
     if cfg.checkpoint_dir is None:
         raise ValueError("run_pipeline requires cfg.checkpoint_dir")
-    os.makedirs(cfg.checkpoint_dir, exist_ok=True)
-    # a fresh run (or resume) clears any stale cancel marker
-    cancel_marker = os.path.join(cfg.checkpoint_dir, "CANCEL")
-    if os.path.exists(cancel_marker):
-        os.remove(cancel_marker)
     spark.sparkContext.setJobGroup(
         _job_group(cfg.run_id), "dude_spark pipeline", interruptOnCancel=True
     )
-    st = _Stages(spark, cfg, resume, store=store)
 
     if images is None:
         images = load_images(spark, cfg)
@@ -423,9 +288,12 @@ def run_pipeline(
             [], "image_id string, caption string, dup_image_id string, "
             "dup_caption string, cluster_id string"
         )
-        return PipelineResult(empty_assign, empty_rep, None, st.stages)
+        return PipelineResult(empty_assign, empty_rep, None, {})
 
-    in_fp = input_fingerprint(spark, cfg)
+    st = StageRunner(
+        spark, cfg.checkpoint_dir, input_fingerprint(spark, cfg.input_paths),
+        run_id=cfg.run_id, resume=resume, store=store,
+    )
 
     # id dictionary encoding (round-2 top lever, operators/ids.py): one
     # shared mapping stage; every bucket explode, candidate pair, edge,
@@ -443,24 +311,24 @@ def run_pipeline(
         )
     else:
         use_iid = cfg.id_encoding == "on"
+    # stages keyed by long iids (candidates, edges, components) carry
+    # use_iid in their params and the ids stage upstream, so a
+    # string-keyed checkpoint never resumes into the long-keyed plan
+    ids_up = ("ids",) if use_iid else ()
     if use_iid:
-        ids_map = st.run("ids", "all", "ids@" + in_fp, lambda: encode_ids(images))
+        ids_map = st.run("ids", lambda: encode_ids(images))
 
         def _enc(df: DataFrame, cols) -> DataFrame:
             return encode_keys(df, ids_map, cols)
 
         def _dec(df: DataFrame, cols) -> DataFrame:
             return decode_keys(df, ids_map, cols)
-
-        iid_tag = "#iid1"
     else:
         def _enc(df: DataFrame, cols) -> DataFrame:
             return df
 
         def _dec(df: DataFrame, cols) -> DataFrame:
             return df
-
-        iid_tag = ""
 
     def run_detector(det: str) -> DataFrame:
         """signatures → candidates → verified edges for one detector."""
@@ -469,22 +337,21 @@ def run_pipeline(
         spark.sparkContext.setJobGroup(
             _job_group(cfg.run_id), f"dude_spark {det}", interruptOnCancel=True
         )
-        cid = cfg.config_id(det) + "@" + in_fp
-        # stages keyed by long iids carry a schema-version tag so a
-        # checkpoint written by the string-keyed layout can never be
-        # resumed into the long-keyed plan (type-mismatched joins)
-        cid_iid = cid + iid_tag
+        sig_stage = f"signatures_{det}"
+        cand_stage = f"candidates_{det}"
 
         def compute_sigs():
             if cfg.use_cache:
                 return _incremental_signatures(
-                    spark, images, det, cfg, st.store, f"signatures_{det}"
+                    spark, images, det, cfg, st.store, sig_stage
                 )
             return _signatures(images, det, cfg).withColumn(
                 "row_fp", F.lit(None).cast("long")
             )
 
-        sigs = st.run(f"signatures_{det}", det, cid, compute_sigs)
+        sigs = st.run(
+            sig_stage, compute_sigs, params=cfg.config_id(det), detector=det
+        )
 
         def compute_pairs():
             # encode BEFORE the bucket explode: the exploded bucket
@@ -502,7 +369,11 @@ def run_pipeline(
             st.store.write(overcap, f"overcap_{det}")
             return pairs
 
-        pairs = st.run(f"candidates_{det}", det, cid_iid, compute_pairs)
+        pairs = st.run(
+            cand_stage, compute_pairs,
+            params={"bucket_cap": cfg.bucket_cap, "use_iid": use_iid},
+            upstream=(sig_stage,) + ids_up, detector=det,
+        )
 
         def compute_edges():
             if _verify_is_noop(det, cfg):
@@ -519,14 +390,16 @@ def run_pipeline(
             verified = _verify(pairs_str, images, sigs, det, cfg)
             return _enc(verified.select("a", "b"), ("a", "b"))
 
-        # the verify-noop tag keys ONLY the edges stage: an edge set
-        # written without verification must not resume into a paranoid
-        # run (and vice versa), but signatures and candidates are
-        # byte-identical across paranoid settings — tagging the whole
-        # config_id would force a pointless corpus re-fingerprint on
-        # every --no-paranoid toggle
-        cid_edges = cid_iid + ("#v0" if _verify_is_noop(det, cfg) else "")
-        edges = st.run(f"edges_{det}", det, cid_edges, compute_edges)
+        # paranoid keys ONLY the edges stage: signatures and candidates
+        # are byte-identical across paranoid settings, so a toggle
+        # recomputes just the edges (and what reads them)
+        edges = st.run(
+            f"edges_{det}", compute_edges,
+            params={
+                "verify": not _verify_is_noop(det, cfg), "use_iid": use_iid
+            },
+            upstream=(cand_stage, sig_stage) + ids_up, detector=det,
+        )
         return edges.select("a", "b")
 
     # Detector chains are independent until the edge union — run them
@@ -545,24 +418,24 @@ def run_pipeline(
     for e in edge_frames[1:]:
         all_edges = all_edges.unionByName(e)
 
-    combined_cid = (
-        "+".join(cfg.config_id(d) for d in cfg.detectors) + "@" + in_fp + iid_tag
-    )
     # CC iterates entirely on long iids; the component minimum decodes
     # to min(image_id) because the mapping is order-preserving (dense
     # rank), so the deterministic-representative contract is unchanged.
     # Decode happens once here, at the stage boundary — report and
     # results stay string-keyed for every consumer.
     assignments = st.run(
-        "components", "all", combined_cid,
+        "components",
         lambda: _dec(
             connected_components(all_edges.distinct()),
             ("image_id", "cluster_id"),
         ),
+        params={"use_iid": use_iid},
+        upstream=tuple(f"edges_{d}" for d in cfg.detectors) + ids_up,
     )
     report = st.run(
-        "report", "all", combined_cid,
+        "report",
         lambda: assignments_to_report(assignments, images),
+        upstream=("components",),
     )
 
     st.flush()

@@ -3,8 +3,9 @@
 Round-1 shipped parquet-dir + JSON-manifest checkpoints with a PROSE
 note that Iceberg slots in; nothing enforced the swap stayed possible
 (round-1 VERDICT "what's missing" #2).  This module makes the seam an
-interface: the pipeline's stage runner talks only to ``StageStore``,
-and the two implementations are
+interface: ``StageRunner`` — the one stage runner, shared by the
+pipeline and ``curate`` — talks only to ``StageStore``, and the two
+implementations are
 
   ParquetManifestStore  sandbox/default: parquet directory per stage
                         with an atomically-published JSON manifest
@@ -30,12 +31,19 @@ running against the parquet store.
 from __future__ import annotations
 
 import abc
+import dataclasses
+import datetime as _dt
+import hashlib
 import json
 import os
 import re
+import threading
+import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+
+from .lineage import flush_records, partition_count_rows
 
 
 class StageStore(abc.ABC):
@@ -61,6 +69,13 @@ class StageStore(abc.ABC):
     @abc.abstractmethod
     def publish_manifest(self, stage: str, meta: dict) -> None:
         """Atomically publish the manifest AFTER the data is durable."""
+
+    @abc.abstractmethod
+    def clear_manifest(self, stage: str) -> None:
+        """Withdraw the stage's manifest (no-op when absent) — call it
+        BEFORE overwriting a published stage, so a crash mid-rewrite
+        leaves a stage no reader trusts instead of a stale manifest
+        vouching for half-written data."""
 
 
 class ParquetManifestStore(StageStore):
@@ -103,6 +118,182 @@ class ParquetManifestStore(StageStore):
             os.remove(self._manifest_path(stage))
         except OSError:
             pass
+
+
+class CancelledRun(RuntimeError):
+    """Raised in the driver when a run is cancelled mid-flight."""
+
+
+@dataclasses.dataclass
+class StageInfo:
+    rows: int
+    wall_s: float
+    skipped: bool
+
+
+def input_fingerprint(spark: SparkSession, paths) -> str:
+    """Fingerprint of the input files: sha256 over sorted
+    (path, size, mtime) of every file under each of ``paths`` — the
+    reference's per-file (FileSize, ModTime) cache probe
+    (hashing.go:73-88) lifted to the table level; on Iceberg this is
+    the table's snapshot id.  Stage keys fold it in, so a changed input
+    invalidates stage skips while `use_cache` still reuses unchanged
+    rows.  Listings go through the Hadoop FileSystem API, so s3:// and
+    hdfs:// roots fingerprint too.  Metadata only, no data reads.  A
+    root with zero files raises: an empty fingerprint must never
+    validate a resume."""
+    jvm = spark._jvm
+    hconf = spark._jsc.hadoopConfiguration()
+    h = hashlib.sha256()
+    for root in paths:
+        path = jvm.org.apache.hadoop.fs.Path(root)
+        fs = path.getFileSystem(hconf)
+        if not fs.exists(path):
+            raise FileNotFoundError(f"input root does not exist: {root}")
+        entries = []
+        it = fs.listFiles(path, True)  # recursive; a plain file lists itself
+        while it.hasNext():
+            st = it.next()
+            entries.append(
+                f"{st.getPath().toString()}|{st.getLen()}"
+                f"|{st.getModificationTime()}\n"
+            )
+        if not entries:
+            raise ValueError(
+                f"input root {root} contains no files — refusing to "
+                "fingerprint an empty input (it would validate stale "
+                "stage checkpoints on resume)"
+            )
+        for e in sorted(entries):
+            h.update(e.encode())
+    return h.hexdigest()[:16]
+
+
+def frame_fingerprint(spark: SparkSession, df: DataFrame) -> str:
+    """Fingerprint of the data behind ``df``: ``input_fingerprint`` of
+    the files it scans (metadata only, no data read).  A frame with no
+    input files — built in memory with ``createDataFrame`` — falls back
+    to an order-insensitive content hash, ``bit_xor(xxhash64(row))``
+    plus the row count (``bit_xor``, not ``sum``: ANSI mode makes an
+    overflowing 64-bit sum an error).  A file-backed frame is keyed by
+    its files only: a filter applied on top of the scan does not
+    change the fingerprint."""
+    files = df.inputFiles()
+    if files:
+        return input_fingerprint(spark, sorted(files))
+    from pyspark.sql import functions as F
+
+    r = df.select(
+        F.coalesce(F.bit_xor(F.xxhash64(*df.columns)), F.lit(0)).alias("h"),
+        F.count(F.lit(1)).alias("n"),
+    ).first()
+    return f"rows:{r['h']}:{r['n']}"
+
+
+class StageRunner:
+    """The one checkpointed stage runner, used by ``run_pipeline`` and
+    ``curate``: DuDe's row cache (recompute only what is new or
+    changed, hashing.go:84-88) lifted from rows to stages.
+
+    Key rule, computed here and nowhere else: a stage's key hashes its
+    name, its own params, the input fingerprint, and the keys of its
+    upstream stages, so a change re-keys exactly the affected stage and
+    its descendants.  With ``resume`` a stage whose manifest carries
+    the same key (and whose data exists) is skipped.  The runner also
+    owns the sticky-cancel check (``pipeline.cancel_run``), the
+    withdraw → write → publish manifest protocol, per-partition row
+    counts, and the buffered run_metrics/lineage rows ``flush`` appends.
+    ``run`` is thread-safe: detector chains call it concurrently.
+    """
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        root: str,
+        input_fp: str,
+        run_id: str = "run",
+        resume: bool = True,
+        store: StageStore | None = None,
+    ):
+        self.spark, self.root, self.input_fp = spark, root, input_fp
+        self.run_id, self.resume = run_id, resume
+        self.store = store or ParquetManifestStore(spark, root)
+        self.stages: dict[str, StageInfo] = {}
+        self._keys: dict[str, str] = {}
+        self._metrics: list[tuple] = []
+        self._lineage: list[tuple] = []
+        self._lock = threading.Lock()
+        os.makedirs(root, exist_ok=True)
+        # a fresh run (or resume) clears any stale cancel marker
+        try:
+            os.remove(os.path.join(root, "CANCEL"))
+        except FileNotFoundError:
+            pass
+
+    def run(
+        self,
+        stage: str,
+        compute,
+        params=None,
+        upstream=(),
+        detector: str = "all",
+    ) -> DataFrame:
+        """Skip or compute stage ``stage``; ``compute()`` builds its
+        frame, ``params`` are the stage's own settings (JSON-able) and
+        ``upstream`` names the stages it reads."""
+        # sticky-cancel check at every stage boundary (≅ ctx polls,
+        # reference hashing.go:58-70)
+        if os.path.exists(os.path.join(self.root, "CANCEL")):
+            raise CancelledRun(f"run cancelled before stage {stage}")
+        blob = json.dumps(
+            [stage, params, self.input_fp, [self._keys[u] for u in upstream]],
+            sort_keys=True,
+            default=str,
+        )
+        key = hashlib.sha256(blob.encode()).hexdigest()[:16]
+        with self._lock:
+            self._keys[stage] = key
+        if self.resume:
+            m = self.store.manifest(stage)
+            if (
+                m is not None
+                and m.get("config_id") == key
+                and self.store.exists(stage)
+            ):
+                with self._lock:
+                    self.stages[stage] = StageInfo(m["rows"], 0.0, skipped=True)
+                return self.store.read(stage)
+        t0 = time.monotonic()
+        self.store.clear_manifest(stage)
+        out = self.store.write(compute(), stage)
+        pc = partition_count_rows(out)  # one cheap count-per-partition job
+        rows = sum(n for _, n in pc)
+        wall = time.monotonic() - t0
+        self.store.publish_manifest(
+            stage,
+            {
+                "run_id": self.run_id,
+                "stage": stage,
+                "config_id": key,
+                "rows": rows,
+                "wall_s": wall,
+            },
+        )
+        ts = _dt.datetime.now(_dt.timezone.utc).isoformat()
+        with self._lock:
+            self._metrics.append(
+                (self.run_id, stage, detector, rows, float(wall), ts, {})
+            )
+            self._lineage.extend(
+                (self.run_id, stage, detector, pid, n) for pid, n in pc
+            )
+            self.stages[stage] = StageInfo(rows, wall, skipped=False)
+        return out
+
+    def flush(self) -> None:
+        """Append the buffered run_metrics and lineage rows."""
+        flush_records(self.spark, self.root, self._metrics, self._lineage)
+        self._metrics, self._lineage = [], []
 
 
 def _hadoop_glob(spark: SparkSession, pattern: str) -> list[str]:
@@ -792,6 +983,12 @@ class IcebergStageStore(StageStore):
             )
         finally:
             self.spark.catalog.dropTempView(view)
+
+    def clear_manifest(self, stage: str) -> None:
+        self.spark.sql(
+            f"DELETE FROM {self._manifests} WHERE stage = :stage",
+            args={"stage": stage},
+        )
 
 
 class IcebergEpochStore:

@@ -75,13 +75,19 @@ def migrate_embedding_centroids(
     (derived from the OLD centroids) — migrating a state dir pinned to
     something else is refused loudly, so the tool cannot be used to
     bulldoze a mismatch it does not understand.  ``new_config_id``:
-    the pin to install (derived from the new centroids).  Returns an
+    the pin to install (derived from the new centroids); required —
+    ``None`` raises ValueError before any state is touched.  Returns an
     audit dict, also written durably under ``<state>/migrations/``.
     """
     import numpy as np
 
     from ..functions.clustering import _assign_udf, _u_frame
 
+    if new_config_id is None:
+        raise ValueError(
+            "new_config_id is required — migrating would install a null "
+            "config pin that no restart can match"
+        )
     meta_path = os.path.join(state_dir, "state_meta.json")
     if not os.path.exists(meta_path):
         raise ValueError(

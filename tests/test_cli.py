@@ -581,6 +581,47 @@ def test_cli_ann_build_query_roundtrip(spark, tmp_path, monkeypatch, capsys):
                   "--n-cells", "0"])
 
 
+def test_cli_ann_build_crash_leaves_refused_index(spark, tmp_path, monkeypatch):
+    """A rebuild that dies after the posting write but before the
+    centroids save / manifest publish leaves an index ann-query
+    refuses — never the old manifest vouching for new postings."""
+    import numpy as np
+    import pandas as pd
+    import pytest
+
+    from dude_spark.config import ConfigError
+
+    inp = str(tmp_path / "embs")
+    rng = np.random.RandomState(34)
+    pdf = pd.DataFrame({
+        "vec_id": list(range(60)),
+        "embedding": [
+            rng.uniform(-0.5, 0.5, 8).astype("float32").tolist()
+            for _ in range(60)
+        ],
+    })
+    spark.createDataFrame(pdf).selectExpr(
+        "vec_id", "cast(embedding as array<float>) embedding"
+    ).write.parquet(inp)
+    monkeypatch.setattr(cli, "get_spark", lambda *a, **k: spark)
+    monkeypatch.setattr(spark, "stop", lambda: None)
+    idx, qdir = str(tmp_path / "ivf"), str(tmp_path / "q")
+    spark.read.parquet(inp).where("vec_id < 2").write.parquet(qdir)
+    assert cli.main(["ann-build", "--input", inp, "--index-dir", idx,
+                     "--n-cells", "4"]) == 0
+
+    def boom(*a, **k):
+        raise RuntimeError("simulated crash before publish")
+
+    monkeypatch.setattr(np, "save", boom)
+    with pytest.raises(RuntimeError, match="simulated"):
+        cli.main(["ann-build", "--input", inp, "--index-dir", idx,
+                  "--n-cells", "8"])
+    with pytest.raises(ConfigError, match="manifest"):
+        cli.main(["ann-query", "--index-dir", idx, "--queries", qdir,
+                  "--out", str(tmp_path / "o")])
+
+
 def test_cli_semdedup_modes(spark, tmp_path, monkeypatch, capsys):
     """semdedup subcommand: batch mode emits keep/remove assignments,
     --new mode emits cross pairs only; bad threshold refused."""

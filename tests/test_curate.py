@@ -10,6 +10,7 @@ import numpy as np
 import pytest  # noqa: F401
 
 from dude_spark.curate import curate
+from dude_spark.lineage import read_lineage
 
 
 def _corpus(spark, n=8):
@@ -47,6 +48,52 @@ def test_config_change_invalidates_exactly_downstream(spark, tmp_path):
     assert r3["stages"]["filtered"]["skipped"]
     assert r3["stages"]["pii"]["skipped"]
     assert not r3["stages"]["deduped"]["skipped"]
+    assert not r3["stages"]["shards"]["skipped"]
+
+
+def test_new_input_recomputes_every_stage(spark, tmp_path):
+    """A different input in the same workdir re-keys the whole chain:
+    no stage is skipped, so the old input's shards are never returned
+    for the new one."""
+    wd = str(tmp_path / "wd")
+    a, b = str(tmp_path / "a"), str(tmp_path / "b")
+    _corpus(spark).write.parquet(a)
+    _corpus(spark, n=10).write.parquet(b)
+    curate(spark, spark.read.parquet(a), wd, rows_per_shard=4)
+    r2 = curate(spark, spark.read.parquet(b), wd, rows_per_shard=4)
+    for s in ("filtered", "pii", "deduped", "shards"):
+        assert not r2["stages"][s]["skipped"], s
+    shards = spark.read.parquet(os.path.join(wd, "shards"))
+    assert "d09" in {r["image_id"] for r in shards.collect()}
+    # the runner's durable per-partition lineage covers curate too
+    lineage = {r["stage"] for r in read_lineage(spark, wd).collect()}
+    assert {"filtered", "pii", "deduped", "shards"} <= lineage
+    # the same files again: every stage skips
+    r3 = curate(spark, spark.read.parquet(b), wd, rows_per_shard=4)
+    for s in ("filtered", "pii", "deduped", "shards"):
+        assert r3["stages"][s]["skipped"], s
+
+
+def test_benchmark_change_recomputes_decontam_and_downstream(spark, tmp_path):
+    """The benchmark set is decontam's own param: a new benchmark frame
+    recomputes decontam and the shards after it, and skips filter, pii
+    and dedup."""
+    wd = str(tmp_path / "wd")
+    docs = _corpus(spark)
+
+    def bench(text):
+        return spark.createDataFrame(
+            [("b1", text)], "image_id string, caption string"
+        )
+
+    curate(spark, docs, wd, rows_per_shard=4,
+           benchmark=bench("first unrelated benchmark passage text"))
+    r2 = curate(spark, docs, wd, rows_per_shard=4,
+                benchmark=bench("second unrelated benchmark passage text"))
+    for s in ("filtered", "pii", "deduped"):
+        assert r2["stages"][s]["skipped"], s
+    for s in ("decontam", "shards"):
+        assert not r2["stages"][s]["skipped"], s
 
 
 def test_empty_after_filter_reports_instead_of_crashing(spark, tmp_path):

@@ -157,6 +157,38 @@ def test_config_change_invalidates_stage(first_run, spark):
     run_pipeline(spark, cfg)
 
 
+def test_bucket_cap_change_recomputes_candidates_and_downstream(
+    spark, input_dir, tmp_path_factory
+):
+    """bucket_cap is the candidates stage's own param: a resume with a
+    new cap skips the signatures and recomputes candidates and every
+    stage after them, matching a cold run at that cap."""
+    import dataclasses
+
+    work = tmp_path_factory.mktemp("pipe_cap")
+    dets = ("exact", "minhash")
+    cfg = JobConfig(
+        input_paths=(input_dir,), checkpoint_dir=str(work / "ckpt"),
+        detectors=dets, run_id="cap64",
+    )
+    run_pipeline(spark, cfg)
+    cfg2 = dataclasses.replace(cfg, bucket_cap=2, run_id="cap2")
+    r2 = run_pipeline(spark, cfg2)
+    for d in dets:
+        assert r2.stages[f"signatures_{d}"].skipped, d
+        assert not r2.stages[f"candidates_{d}"].skipped, d
+        assert not r2.stages[f"edges_{d}"].skipped, d
+    assert not r2.stages["components"].skipped
+    assert not r2.stages["report"].skipped
+    cold = run_pipeline(
+        spark, dataclasses.replace(cfg2, checkpoint_dir=str(work / "cold"))
+    )
+    for d in dets:
+        stage = f"candidates_{d}"
+        assert r2.stages[stage].rows == cold.stages[stage].rows, stage
+    assert _assign_set(r2) == _assign_set(cold)
+
+
 def test_empty_input_early_exit(spark, tmp_path_factory):
     work = tmp_path_factory.mktemp("pipe_empty")
     empty = spark.createDataFrame(
@@ -229,6 +261,45 @@ def test_incremental_signature_cache(spark, fixture_pdf, tmp_path_factory):
         .collect()[0]["bands"]
     )
     assert list(sigs2.loc[changed_id, "bands"]) == list(fresh)
+
+
+def test_incremental_simhash_cache_alternating_inputs(
+    spark, fixture_pdf, tmp_path_factory
+):
+    """The simhash cache holds one row per (image, channel): a changed
+    image must be re-signed once, not once per cached row, so
+    alternating two inputs keeps the stage at a cold run's size."""
+    import dataclasses
+
+    work = tmp_path_factory.mktemp("cache_alt")
+    a = fixture_pdf.head(80)[IMAGES_COLUMNS]
+    b = a.copy()
+    b.loc[b.index[:10], "caption"] = [f"a rewritten caption {i}" for i in range(10)]
+    paths = {}
+    for name, pdf in (("a", a), ("b", b)):
+        paths[name] = str(work / f"{name}.parquet")
+        spark.createDataFrame(pdf).write.parquet(paths[name])
+
+    def sig_rows(cfg):
+        run_pipeline(spark, cfg)
+        sigs = spark.read.parquet(
+            os.path.join(cfg.checkpoint_dir, "stages", "signatures_simhash")
+        )
+        dups = sigs.groupBy("image_id", "channel").count().where("count > 1")
+        return sigs.count(), dups.count()
+
+    base = JobConfig(detectors=("simhash",), use_cache=True, run_id="alt")
+    cold = {
+        n: sig_rows(dataclasses.replace(
+            base, input_paths=(p,), checkpoint_dir=str(work / f"cold_{n}")
+        ))[0]
+        for n, p in paths.items()
+    }
+    for n in ("a", "b", "a", "b"):
+        cfg = dataclasses.replace(
+            base, input_paths=(paths[n],), checkpoint_dir=str(work / "ckpt")
+        )
+        assert sig_rows(cfg) == (cold[n], 0), n
 
 
 def test_incremental_signatures_survive_schema_migration(spark, images_df, tmp_path):

@@ -882,3 +882,22 @@ def test_tilephash_hamming_state_compacts_and_radius_is_pinned(
         ).collect()
     }
     assert ("a", "crop2") in pairs
+
+
+def test_migrate_refuses_null_new_pin(spark, tmp_path):
+    """A migration without a new config pin is refused before any state
+    is rewritten — a null pin would match no restart."""
+    import json
+
+    from dude_spark.streaming import migrate_embedding_centroids
+
+    state = tmp_path / "state"
+    state.mkdir()
+    meta = {"config_id": "old", "n_state_shards": 4}
+    (state / "state_meta.json").write_text(json.dumps(meta))
+    with pytest.raises(ValueError, match="new_config_id"):
+        migrate_embedding_centroids(
+            spark, str(state), [[1, 0], [0, 1]], expected_config_id="old"
+        )
+    assert json.loads((state / "state_meta.json").read_text()) == meta
+    assert sorted(os.listdir(state)) == ["state_meta.json"]
