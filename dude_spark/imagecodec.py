@@ -163,11 +163,6 @@ def phash64(pixels: np.ndarray, grid: int = 8) -> int:
     return int(val.astype(np.int64))  # wrap into Spark LongType range
 
 
-def phash64_batch(pixel_list: list[np.ndarray]) -> np.ndarray:
-    """Vectorized-per-batch phash for pandas UDF use."""
-    return np.array([phash64(p) for p in pixel_list], dtype=np.int64)
-
-
 def pyramid_phash64(pixels: np.ndarray, grid: int = 2) -> list[int]:
     """[phash(full), phash(tile_0), …, phash(tile_{grid²-1})] — the
     full-image hash plus one per grid×grid tile (row-major, floor
