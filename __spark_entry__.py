@@ -68,6 +68,7 @@ from dude_spark.operators.pii import (
 )
 from dude_spark.operators.shards import shard_assignment
 from dude_spark.operators.snapshot import snapshot_diff
+from dude_spark.session import pin
 from dude_spark.operators.boilerplate import boilerplate_ngrams
 from dude_spark.operators.textdedup import (
     chunk_dedup,
@@ -596,7 +597,7 @@ def _ngram_pairs_checkpointed(spark, sf_dir):
             old.unpersist()
         except Exception:
             pass
-    df = q_ngram_pairs(spark, sf_dir).localCheckpoint(eager=True)
+    df = pin(q_ngram_pairs(spark, sf_dir))
     _NGRAM_PAIRS_MEMO[key] = (spark, df)
     return df
 
@@ -1183,14 +1184,14 @@ def q_minhash_pairs(spark, sf_dir):
     near-dups."""
     docs = _plant_near_dups(_docs_as_images(spark, sf_dir))
     cfg = MinHashConfig()
-    # eager localCheckpoint on the UDF signatures: pairs_from_buckets
+    # eager pin of the UDF signatures: pairs_from_buckets
     # runs a skew-detection action plus the pairs action, and the
     # prefilter + verify re-read sigs — without a checkpoint each
     # action re-runs the signature UDF chain.  (A lazy persist() on
     # buckets was A/B-measured round 3 and LOST: its first-action
     # cache fill cost more than the checkpoint barrier in every
     # pairing — 46/42 s vs 32/31 s walls.)
-    sigs = minhash_signatures(docs, cfg).localCheckpoint(eager=True)
+    sigs = pin(minhash_signatures(docs, cfg))
     pairs, _ = pairs_from_buckets(
         minhash_buckets(sigs), bucket_cap=64, overcap_mode="exhaustive"
     )
@@ -1220,7 +1221,7 @@ def q_simhash_pairs(spark, sf_dir):
     # signature table, so pinning the sig level serves all three
     # consumers (overcap collect, pairing, verify) with one UDF pass
     # (lazy persist A/B-measured round 3: never faster, see minhash)
-    sigs = simhash_signatures(docs, cfg).localCheckpoint(eager=True)
+    sigs = pin(simhash_signatures(docs, cfg))
     pairs, _ = pairs_from_buckets(
         simhash_buckets(sigs, cfg), bucket_cap=64, overcap_mode="exhaustive"
     )
@@ -1238,7 +1239,7 @@ def q_substring_pairs(spark, sf_dir):
     self-join at sf0.01 (500 docs)."""
     docs = _docs_as_images(spark, sf_dir)
     cfg = SuffixConfig(min_match_len=32)
-    sigs = suffix_signatures(docs, cfg).localCheckpoint(eager=True)
+    sigs = pin(suffix_signatures(docs, cfg))
     pairs, _ = pairs_from_buckets(
         suffix_buckets(sigs), bucket_cap=64, overcap_mode="exhaustive"
     )
@@ -1444,7 +1445,7 @@ def q_semantic_dedup(spark, sf_dir):
     # CC runs several actions (distinct-count probe + the union-find
     # collect or star rounds); checkpoint the pair table so the cosine
     # scoring chain computes once, the _ngram_pairs_checkpointed pattern
-    pairs = q_embedding_dup_pairs(spark, sf_dir).localCheckpoint(eager=True)
+    pairs = pin(q_embedding_dup_pairs(spark, sf_dir))
     assigns = connected_components(pairs)
     return assigns.select(
         F.col("image_id").cast("long").alias("vec_id"),

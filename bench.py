@@ -8,7 +8,8 @@ $SPARK_GRAFT_SF_DIR.
 
 Env knobs:
   SPARK_GRAFT_SF_DIR   input dir (default /root/testdata/sf0.1)
-  SPARK_GRAFT_CPUS     local[N] parallelism (default 32)
+  SPARK_GRAFT_CPUS     local[N] parallelism (default: the cores this
+                       process may run on)
   SPARK_GRAFT_IMAGES_N override images-fixture row count
                        (default 200_000 × sf)
 
@@ -29,7 +30,7 @@ import time
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     sf = float(os.path.basename(sf_dir.rstrip("/")).removeprefix("sf") or "0.1")
     n_images = int(os.environ.get("SPARK_GRAFT_IMAGES_N", str(max(500, int(200_000 * sf)))))
 

@@ -36,7 +36,7 @@ import shutil
 import sys
 
 from .config import ConfigError, JobConfig, MinHashConfig, SimHashConfig, SuffixConfig
-from .session import get_spark
+from .session import get_spark, pin
 
 
 def _session_flags(p: argparse.ArgumentParser) -> None:
@@ -1138,8 +1138,10 @@ def _cmd_dedup_lines(a: argparse.Namespace) -> int:
 
 
 def _cmd_sample(a: argparse.Namespace) -> int:
-    if a.fractions is not None and a.strata_col is None:
-        raise ConfigError("--fractions requires --strata-col")
+    if a.fractions is not None:
+        if a.strata_col is None:
+            raise ConfigError("--fractions requires --strata-col")
+        fr = _parse_share_list(a.fractions, "--fractions")
     with _session(a, "dude_spark_sample") as spark:
         from .functions.splits import (
             deterministic_sample,
@@ -1159,7 +1161,6 @@ def _cmd_sample(a: argparse.Namespace) -> int:
             )
             label = f"weight col {a.weight_col!r}"
         else:
-            fr = _parse_share_list(a.fractions, "--fractions")
             kept = stratified_sample(
                 docs, fr, strata_col=a.strata_col,
                 id_col=a.id_col, seed=a.seed,
@@ -1222,9 +1223,7 @@ def _cmd_cluster(a: argparse.Namespace) -> int:
 
             # one u-frame shared by fit AND assignment — the
             # kmeans_clusters fast path, not two corpus passes
-            u = _u_frame(embs, a.id_col, a.vec_col).localCheckpoint(
-                eager=True
-            )
+            u = pin(_u_frame(embs, a.id_col, a.vec_col))
             cent = _fit_on_u(u, a.k, a.iters)
             if cent.size == 0:
                 raise ConfigError(
@@ -1508,8 +1507,7 @@ def _cmd_dedup_new(a: argparse.Namespace) -> int:
             # pandas-UDF signature chains + the eager skew probes
             # inside cross_corpus_pairs: pin the buckets once or
             # every probe action re-runs the UDFs
-            kb = kb.localCheckpoint(eager=True)
-            nb = nb.localCheckpoint(eager=True)
+            kb, nb = pin(kb), pin(nb)
         pairs, overcap = cross_corpus_pairs(
             kb, nb, a.bucket_cap, a.overcap_mode
         )

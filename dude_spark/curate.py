@@ -40,6 +40,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .session import pin
 from .storage import StageRunner, StageStore, frame_fingerprint
 
 
@@ -127,7 +128,7 @@ def curate(
     # 3 — dedup: exact (sha2 of text) + fuzzy (n-gram Jaccard) edges →
     # connected components → keep each cluster's min-id representative
     def _dedup():
-        base = scrubbed.localCheckpoint(eager=True)  # feeds 3 consumers
+        base = pin(scrubbed)  # feeds 3 consumers
         exact_b = base.where(
             F.col("caption").isNotNull() & (F.length("caption") > 0)
         ).select(
@@ -142,7 +143,7 @@ def curate(
             max_gram_df=max_gram_df,
         )
         edges = e_pairs.select("a", "b").unionByName(fuzzy.select("a", "b"))
-        assigns = connected_components(edges).localCheckpoint(eager=True)
+        assigns = pin(connected_components(edges))
         _audit(workdir, "dedup_assignments", assigns)
         _audit(workdir, "dedup_overcap", overcap)
         return dedup_corpus(base, assigns, "image_id")

@@ -47,7 +47,7 @@ members sum to the zero vector) keep their previous centroid — the
 _spherical_kmeans convention.
 
 Scale shape at 10^12 rows: the u-frame is computed once in pure
-codegen and localCheckpointed; each iteration ships k·dim longs to
+codegen and pinned; each iteration ships k·dim longs to
 executors in the UDF closure (~2 MB at k=4096·dim 64 — broadcast-sized
 by construction) and returns k·dim longs to the driver; no other
 collect exists.  ``ensure_min_partitions`` floors the scan ahead of
@@ -68,7 +68,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..session import ensure_min_partitions
+from ..session import ensure_min_partitions, pin
 
 SCALE = 1_000_000
 
@@ -194,7 +194,7 @@ def kmeans_fit(
         raise ValueError(f"k must be positive, got {k}")
     if iters < 0:
         raise ValueError(f"iters must be >= 0, got {iters}")
-    u = _u_frame(corpus, id_col, vec_col).localCheckpoint(eager=True)
+    u = pin(_u_frame(corpus, id_col, vec_col))
     return _fit_on_u(u, k, iters)
 
 
@@ -276,7 +276,7 @@ def kmeans_clusters(
         raise ValueError(f"k must be positive, got {k}")
     if iters < 0:
         raise ValueError(f"iters must be >= 0, got {iters}")
-    u = _u_frame(corpus, id_col, vec_col).localCheckpoint(eager=True)
+    u = pin(_u_frame(corpus, id_col, vec_col))
     cent = _fit_on_u(u, k, iters)
     if cent.size == 0:
         return corpus.where(F.lit(False)).select(
@@ -357,7 +357,7 @@ def semdedup(
     pipeline, k-means rounds included, replays bit-exactly in the
     driver query's DuckDB oracle (``semdedup_prune``).
 
-    The assignment stage is localCheckpointed before pair generation:
+    The assignment stage is pinned before pair generation:
     pairs_from_buckets is EAGER (a skew-probe action at call time) and
     would otherwise re-run the assignment UDF chain per action.
     """
@@ -368,7 +368,7 @@ def semdedup(
         raise ValueError(
             f"threshold_x1000 must be in [0, 1000], got {threshold_x1000}"
         )
-    u = _u_frame(corpus, id_col, vec_col).localCheckpoint(eager=True)
+    u = pin(_u_frame(corpus, id_col, vec_col))
     cent = _fit_on_u(u, k, iters)
     if cent.size == 0:
         return corpus.where(F.lit(False)).select(
@@ -378,9 +378,9 @@ def semdedup(
         )
     ns2 = [int((row.astype(object) ** 2).sum()) for row in cent]
     assign = _assign_udf(cent, ns2, with_sim=False)
-    assigned = u.select(
+    assigned = pin(u.select(
         F.col("_id").alias("image_id"), assign(F.col("_u")).alias("bucket")
-    ).localCheckpoint(eager=True)
+    ))
 
     pairs, _overcap = pairs_from_buckets(
         assigned, bucket_cap=cluster_cap, overcap_mode="exhaustive"
@@ -462,7 +462,7 @@ def semdedup_new(
         raise ValueError(
             f"threshold_x1000 must be in [0, 1000], got {threshold_x1000}"
         )
-    u_known = _u_frame(corpus, id_col, vec_col).localCheckpoint(eager=True)
+    u_known = pin(_u_frame(corpus, id_col, vec_col))
     cent = _fit_on_u(u_known, k, iters)
     if cent.size == 0:
         raise ValueError(
@@ -472,13 +472,13 @@ def semdedup_new(
         )
     ns2 = [int((row.astype(object) ** 2).sum()) for row in cent]
     assign = _assign_udf(cent, ns2, with_sim=False)
-    u_new = _u_frame(new, id_col, vec_col).localCheckpoint(eager=True)
-    kb = u_known.select(
+    u_new = pin(_u_frame(new, id_col, vec_col))
+    kb = pin(u_known.select(
         F.col("_id").alias("image_id"), assign(F.col("_u")).alias("bucket")
-    ).localCheckpoint(eager=True)
-    nb = u_new.select(
+    ))
+    nb = pin(u_new.select(
         F.col("_id").alias("image_id"), assign(F.col("_u")).alias("bucket")
-    ).localCheckpoint(eager=True)
+    ))
 
     # disjoint-id contract (see docstring): bounded limit(1) probe on
     # the checkpointed 8-byte-key frames — an overlap would fan out the

@@ -48,6 +48,7 @@ from pyspark.sql import functions as F
 
 from ..detectors.simhash import pigeonhole_key_array
 from ..operators.candidates import pairs_from_buckets
+from ..session import pin
 
 
 def _seeded_rs(tag: str, seed: int) -> np.random.RandomState:
@@ -542,7 +543,7 @@ def _lsh_signature_base(
     the whole hyperplane matmul to one core (the same §10.5 lesson the
     text detectors apply; round-3 VERDICT next #10).  Factored out of
     the LSH path so the partition floor stays plan-assertable: the
-    caller's localCheckpoint truncates the visible plan."""
+    caller's pin truncates the visible plan."""
     from ..session import ensure_min_partitions
 
     sig = signature_udf(dim, 64, seed)
@@ -572,7 +573,7 @@ def _cosine_dup_pairs_lsh(
     # is the dominant cost of the path; on a cluster replace with a
     # stage-store write, as the pipeline does)
     base = _lsh_signature_base(corpus, id_col, vec_col, dim, seed)
-    base = base.localCheckpoint(eager=True)
+    base = pin(base)
     buckets = base.select(
         "image_id",
         F.explode(

@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import pin
+
 
 def value_x100(value: Column) -> Column:
     """Per-EVENT integerization of a 2-decimal double (×100, round,
@@ -153,24 +155,6 @@ def sessionize(
     ``bucket_seconds`` ≫ the gap (e.g. hours vs a 30-minute gap) so
     merges stay rare; correctness never depends on the choice.
     """
-    return _sessionize_impl(
-        events, gap_minutes, ts_col, user_col, value_col, bucket_seconds
-    )
-
-
-def _sessionize_impl(
-    events: DataFrame,
-    gap_minutes: int,
-    ts_col: str,
-    user_col: str,
-    value_col: str,
-    bucket_seconds: int | None,
-    _checkpoint: bool = True,
-) -> DataFrame:
-    """Body of ``sessionize``.  ``_checkpoint=False`` skips the lazy
-    localCheckpoint of the per-session frame so plan tests can assert
-    the event-level window shape (a checkpoint truncates the visible
-    plan to a Scan ExistingRDD); production keeps the default."""
     ts = F.col(ts_col).cast("timestamp")
     gap = F.expr(f"INTERVAL {int(gap_minutes)} MINUTES")
     if bucket_seconds is None:
@@ -245,10 +229,9 @@ def _sessionize_impl(
         F.count("*").alias("_n"),
         F.sum("_vx").alias("_v"),
     )
-    if _checkpoint:
-        # two consumers (bucket summary + final join) — lazy checkpoint
-        # the SMALL per-session frame so the event windows run once
-        loc = loc.localCheckpoint(eager=False)
+    # two consumers (bucket summary + final join) — lazy pin of the
+    # SMALL per-session frame so the event windows run once
+    loc = pin(loc, eager=False)
     summ = loc.groupBy("_u", "_b").agg(
         F.min("_s_start").alias("_bmin"),
         F.max("_s_end").alias("_bmax"),

@@ -7,8 +7,8 @@ classic distributed alternative reproduces the exact same integers in
 two narrow jobs (the same shape as operators/ids.py dense rank):
 
   1. range-repartition on the order columns (samples boundaries, no
-     global sort), sort within partitions, pin the layout with a
-     localCheckpoint (repartitionByRange resamples per action — without
+     global sort), sort within partitions, pin the layout
+     (``session.pin``; repartitionByRange resamples per action — without
      pinning, the count job and the enumerate job could disagree);
   2. count rows per partition (map-side combinable, #partitions rows to
      the driver), cumulate into per-partition rank offsets;
@@ -34,6 +34,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
+
+from ..session import pin
 
 
 def with_global_rank(
@@ -86,7 +88,7 @@ def _with_running(
         part = df.repartitionByRange(partitions, *[F.col(c) for c in cols])
     else:
         part = df.repartitionByRange(*[F.col(c) for c in cols])
-    part = part.sortWithinPartitions(*cols).localCheckpoint(eager=True)
+    part = pin(part.sortWithinPartitions(*cols))
     aggs = [F.count("*").alias("n")]
     if weight_col is not None:
         w = F.col(weight_col).cast("long")

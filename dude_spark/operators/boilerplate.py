@@ -47,7 +47,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens, word_ngrams
-from ..session import ensure_min_partitions
+from ..session import ensure_min_partitions, pin
 
 # hot-set size above which the broadcast hint is dropped and the probe
 # joins as a shuffle join instead: boilerplate is small by definition,
@@ -120,7 +120,7 @@ def boilerplate_ngrams(
     # without it the probe AND the join's hot side each re-run the
     # whole explode→hash→aggregate detection shuffle (measured 2.5×
     # the single-pass wall at sf0.1)
-    hot = _hot_hashes(doc_grams, min_df).localCheckpoint(eager=False)
+    hot = pin(_hot_hashes(doc_grams, min_df), eager=False)
     # recover the strings map-side: re-explode, broadcast the hot hash
     # set, keep one row per (gram, df) — only hot gram strings shuffle
     # (through the distinct), and boilerplate is small by definition
@@ -163,9 +163,10 @@ def strip_boilerplate(
         hot = hot_grams.select(F.xxhash64("gram").alias("gh"))
     else:
         # same single-detection-pass checkpoint as boilerplate_ngrams
-        hot = _hot_hashes(
-            _doc_grams(docs, id_col, text_col, n), min_df
-        ).localCheckpoint(eager=False)
+        hot = pin(
+            _hot_hashes(_doc_grams(docs, id_col, text_col, n), min_df),
+            eager=False,
+        )
 
     # all window positions this time (coverage removes every
     # occurrence); the broadcast join filters map-side, so the
@@ -267,7 +268,7 @@ def duplication_profile(
     # clusters the superset — AND the attach join's gh requirement, so
     # the scan→explode→hash subtree executes exactly once and neither
     # consumer adds a second wide shuffle of the gram table.  (NOT a
-    # localCheckpoint: a lazy one truncates lineage mid-job and floods
+    # pin: a lazy one truncates lineage mid-job and floods
     # the log with non-existent-accumulator errors from the
     # still-finishing pre-checkpoint stages; an eager one materializes
     # |grams| rows to executor disk that the reused exchange already
@@ -346,21 +347,24 @@ def strip_common_lines(
     # and `hot` is consumed by _hot_join_side's EAGER size probe AND
     # the join itself — without pinning, each consumer re-runs the
     # scan -> split -> explode (and the detection shuffle) from scratch
-    lines = ensure_min_partitions(base).select(
-        "_id",
-        F.posexplode(F.split(F.col(text_col), _re.escape(sep), -1)).alias(
-            "_pos", "_line"
-        ),
-    ).withColumn("_lh", F.xxhash64("_line")).localCheckpoint(eager=False)
-    hot = (
+    lines = pin(
+        ensure_min_partitions(base).select(
+            "_id",
+            F.posexplode(F.split(F.col(text_col), _re.escape(sep), -1)).alias(
+                "_pos", "_line"
+            ),
+        ).withColumn("_lh", F.xxhash64("_line")),
+        eager=False,
+    )
+    hot = pin(
         lines.where(F.trim(F.col("_line")) != "")
         .select("_id", "_lh")
         .distinct()
         .groupBy("_lh")
         .agg(F.countDistinct("_id").cast("long").alias("_df"))
         .where(F.col("_df") >= min_df)
-        .select("_lh")
-        .localCheckpoint(eager=False)
+        .select("_lh"),
+        eager=False,
     )
     kept = lines.join(_hot_join_side(hot), "_lh", "left_anti")
     stats = lines.groupBy("_id").agg(F.count("*").cast("long").alias("n_lines"))

@@ -15,8 +15,8 @@ the reference's nondeterministic map-iteration representative choice
 (hashing.go:370, comment "smallest name?").
 
 Scale notes: every round is two shuffles (groupBy min + join) with
-map-side partial aggregation; `localCheckpoint` each round truncates
-the lineage so plans don't grow; convergence is detected via a cheap
+map-side partial aggregation; a lazy ``session.pin`` each round
+truncates the lineage so plans don't grow; convergence is detected via a cheap
 count+hash aggregate.  Labels are the ids themselves — the pipeline
 feeds this operator DENSE LONG iids (operators/ids.py dictionary
 encoding, round-3), so every round shuffles 8-byte keys; the operator
@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.types import StructField, StructType
+
+from ..session import pin
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -135,7 +137,6 @@ DRIVER_EDGE_CAP = 2_000_000
 def connected_components(
     pairs: DataFrame,
     max_iterations: int = 30,
-    checkpoint: bool = True,
     driver_cap: int = DRIVER_EDGE_CAP,
 ) -> DataFrame:
     """pairs(a, b) → assignments(image_id, cluster_id).
@@ -165,21 +166,18 @@ def connected_components(
         a_type = pairs.schema["a"].dataType
         if not isinstance(a_type, (T.LongType, T.IntegerType, T.ShortType)):
             driver_cap = max(1, driver_cap // 8)
-        if checkpoint:
-            # pin so the probe's materialization is reused by whichever
-            # path runs (toPandas, or round 1 of the star loop)
-            edges = edges.localCheckpoint(eager=False)
+        # pin so the probe's materialization is reused by whichever
+        # path runs (toPandas, or round 1 of the star loop)
+        edges = pin(edges, eager=False)
         if edges.count() <= driver_cap:
             return _driver_components(edges)
     prev = None
     for _ in range(max_iterations):
-        edges = _small_star(_large_star(edges))
-        if checkpoint:
-            # lazy checkpoint: the fingerprint action below materializes
-            # it, so each round costs ONE driver job (checkpoint + conv
-            # check fused), not two — the CC loop is part of the
-            # pipeline's serial floor (round-1 VERDICT #8)
-            edges = edges.localCheckpoint(eager=False)
+        # lazy pin: the fingerprint action below materializes it, so
+        # each round costs ONE driver job (pin + convergence check
+        # fused), not two — the CC loop is part of the pipeline's
+        # serial floor (round-1 VERDICT #8)
+        edges = pin(_small_star(_large_star(edges)), eager=False)
         fp = _fingerprint(edges)
         if fp == prev:
             break

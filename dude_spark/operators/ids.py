@@ -26,7 +26,7 @@ Design constraints and why this shape:
     per-partition offsets on the driver (#partitions values — tiny),
     then enumerate each partition with offset + local index in one
     mapInPandas pass.  No single-task global sort, no zipWithIndex
-    RDD round-trip.  The localCheckpoint between the two jobs is
+    RDD round-trip.  The pin between the two jobs is
     CORRECTNESS, not caching: repartitionByRange samples boundaries,
     so without pinning the computed partitions the count job and the
     enumerate job could see different layouts.

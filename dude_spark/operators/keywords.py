@@ -29,7 +29,7 @@ Scale shape (the point at 10^12 docs):
 
 * ONE tokenize → (doc, term) count aggregate — the canonical word-count
   shuffle, map-side combinable.  The result is term-repartitioned and
-  LAZILY localCheckpointed so every term-keyed consumer — the df
+  LAZILY pinned so every term-keyed consumer — the df
   aggregate AND the tf⋈df score join — reads one materialization
   instead of re-running scan→tokenize→explode (the consumers prune
   different columns, which defeats plain ReusedExchange — the
@@ -59,6 +59,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.ranking import grouped_topk
+from ..session import pin
 from .vocab import _tokens
 
 
@@ -69,7 +70,7 @@ def _term_stats(
 
     tf counts token OCCURRENCES per (doc, term); df counts DOCUMENTS
     per term (a plain count over the per-doc-unique tf frame).  The tf
-    frame is LAZILY localCheckpointed (the duplication_profile
+    frame is LAZILY pinned (the duplication_profile
     pattern, boilerplate.py): its consumers — the df aggregate, the
     score join's probe side, and the n_docs scalar — prune DIFFERENT
     column sets, so Catalyst pushes distinct projections into the
@@ -78,12 +79,12 @@ def _term_stats(
     checkpoint, one with).  Lazy, so building the frame costs nothing
     until the query's own first action materializes it once.
     """
-    tf = (
+    tf = pin(
         _tokens(docs, text_col, F.col(id_col).alias("doc"))
         .groupBy("doc", "token")
         .agg(F.count("*").cast("long").alias("tf"))
-        .repartition(F.col("token"))
-        .localCheckpoint(eager=False)
+        .repartition(F.col("token")),
+        eager=False,
     )
     df = tf.groupBy("token").agg(F.count("*").cast("long").alias("df"))
     n_docs = tf.select(F.countDistinct("doc").alias("n_docs"))

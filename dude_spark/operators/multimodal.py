@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..imagecodec import CodecError, decode, encode, phash64
+from ..session import pin
 
 DECODED_SCHEMA = (
     "image_id string, fmt string, w int, h int, ok boolean, err string"
@@ -336,19 +337,18 @@ def tile_phash_pairs(
     instead.
 
     Scale shape: one decode pass (mapInPandas, skip-and-count),
-    localCheckpointed before the EAGER pairs_from_buckets probe so
+    pinned before the EAGER pairs_from_buckets probe so
     the Python decode chain never re-runs; candidates ride
     ``pairs_from_buckets(exhaustive)`` — degenerate constant tiles
     (all-black borders hash to the same key in every image) are
     exactly the hot-bucket skew the salted grid caps, recorded in
     ``overcap``, never silent.
     """
-    feats = (
+    feats = pin(
         extract_tile_features(images, grid)
         .where(F.col("ok"))
         .select("image_id", F.explode("keys").alias("bucket"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     from .candidates import pairs_from_buckets
 
@@ -444,11 +444,10 @@ def tile_phash_pairs_hamming(
     from ..detectors.simhash import pigeonhole_key_array
     from .candidates import pairs_from_buckets
 
-    feats = (
+    feats = pin(
         extract_tile_features(images, grid)
         .where(F.col("ok"))
         .select("image_id", F.col("keys").alias("tile_keys"))
-        .localCheckpoint(eager=True)
     )
     buckets = (
         feats.select("image_id", F.explode("tile_keys").alias("_tile"))

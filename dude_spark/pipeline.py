@@ -30,7 +30,7 @@ on the contract; pass ``store=`` to run_pipeline to select.
 Scale notes: `bytes` is projected away before every shuffle except the
 exact detector's verify join (SURVEY.md §7 hard-part (e)); candidate
 generation is bucket-capped with star edges (operators/candidates.py);
-CC uses localCheckpoint-per-round (operators/components.py); stage
+CC pins each round (operators/components.py); stage
 reads come back from parquet so no lineage chain spans a stage
 boundary.
 """
@@ -54,6 +54,7 @@ from .operators.components import connected_components
 from .operators.ids import decode_keys, encode_ids, encode_keys
 from .operators.report import assignments_to_report, write_csv_report
 from .operators.verify import prefilter_minhash, verify_exact, verify_jaccard
+from .session import pin
 from .storage import (  # noqa: F401 — CancelledRun re-exported for callers
     CancelledRun,
     StageInfo,
@@ -219,11 +220,11 @@ def _incremental_signatures(
         # BEFORE the checkpoint so the useless cache is never
         # materialized.
         return full
-    # localCheckpoint BEFORE the stage overwrites the cache — Spark
+    # pin BEFORE the stage overwrites the cache — Spark
     # reads lazily, so writing over the table still being scanned
     # would corrupt the very cache being merged.  (With Iceberg this
     # is a snapshot-isolated MERGE INTO and the checkpoint is free.)
-    cached = cached.localCheckpoint(eager=True)
+    cached = pin(cached)
     current = fp.select("image_id", "row_fp")
     unchanged = cached.join(current, ["image_id", "row_fp"])  # semi via inner
     # anti join, one row per current image: the cache holds one row per
@@ -442,4 +443,11 @@ def run_pipeline(
     csv_path = None
     if cfg.results_dir:
         csv_path = write_csv_report(report, cfg.results_dir)
-    return PipelineResult(assignments, report, csv_path, st.stages)
+    # pipeline order, not the order the concurrent detector chains
+    # finished in — a run and its resume list stages identically
+    order = ["ids"] + [
+        f"{s}_{d}" for d in cfg.detectors
+        for s in ("signatures", "candidates", "edges")
+    ] + ["components", "report"]
+    stages = {s: st.stages[s] for s in order if s in st.stages}
+    return PipelineResult(assignments, report, csv_path, stages)

@@ -36,6 +36,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import pin
+
 _WALK_SCHEMA = (
     "path string, content binary, length long, mod_time_ns long, ok boolean"
 )
@@ -126,7 +128,7 @@ def _list_files(
     walk their seeds with a per-seed file budget; a seed that blows the
     budget stops descending and emits its not-yet-walked directories
     back as seeds, which the next round spreads across fresh tasks.
-    Round outputs are localCheckpointed (paths only — tiny next to the
+    Round outputs are pinned (paths only — tiny next to the
     reads) so the loop's continuation probe never re-walks.  The final
     round walks without a budget, so listing always COMPLETES even for
     a pathologically deep re-seed chain (never silently drops files).
@@ -190,9 +192,9 @@ def _list_files(
     file_frames: list[DataFrame] = []
     for rnd in range(max_rounds):
         last = rnd == max_rounds - 1
-        walked = seeds_df.mapInPandas(
+        walked = pin(seeds_df.mapInPandas(
             make_walker(None if last else reseed_threshold), schema
-        ).localCheckpoint(eager=True)
+        ))
         file_frames.append(walked.where(~F.col("is_dir")).select("path"))
         reseeds = walked.where(F.col("is_dir"))
         if last or not reseeds.limit(1).count():

@@ -480,40 +480,35 @@ class ShardedEpochStore:
             "int"
         )
 
-    def write_epoch(self, df: DataFrame, epoch: int) -> None:
-        """Overwrite epoch ``epoch`` with ``df`` sharded by the key.
+    def _sharded(self, df: DataFrame) -> DataFrame:
+        """``df`` with its ``shard`` column, one partition per shard and
+        key-sorted within it — the layout of every write to the state.
 
         ``repartition(shard)`` before ``partitionBy`` so each shard is
         one writer's output (no small-file explosion: without it every
         task opens a file per shard it sees → tasks × shards files);
         ``sortWithinPartitions(key)`` gives parquet min/max row-group
         stats on the key for scan-time pruning inside a shard."""
-        from pyspark.sql import functions as F
-
-        (
+        return (
             df.withColumn("shard", self._shard_expr())
-            .repartition(F.col("shard"))
+            .repartition("shard")
             .sortWithinPartitions(self.key_col)
-            .write.partitionBy("shard")
-            .mode("overwrite")
-            .parquet(os.path.join(self.base, f"epoch={epoch}"))
         )
+
+    def _write_sharded(self, df: DataFrame, path: str) -> None:
+        self._sharded(df).write.partitionBy("shard").mode("overwrite").parquet(
+            path
+        )
+
+    def write_epoch(self, df: DataFrame, epoch: int) -> None:
+        """Overwrite epoch ``epoch`` with ``df`` sharded by the key."""
+        self._write_sharded(df, os.path.join(self.base, f"epoch={epoch}"))
 
     def shards_for(self, keys_df: DataFrame) -> list[int]:
         """Distinct shards the given keys can live in — the collect is
         bounded by n_shards (≤64 rows by default), NEVER by the key or
         corpus count."""
-        from pyspark.sql import functions as F
-
-        rows = (
-            keys_df.select(
-                F.pmod(F.xxhash64(self.key_col), F.lit(self.n_shards))
-                .cast("int")
-                .alias("shard")
-            )
-            .distinct()
-            .collect()
-        )
+        rows = keys_df.select(self._shard_expr().alias("shard")).distinct().collect()
         return sorted(r["shard"] for r in rows)
 
     # -- compaction generation bookkeeping --------------------------
@@ -675,6 +670,67 @@ class ShardedEpochStore:
             ]
         )
 
+    def _commit_generation(self, upto_epoch: int, build) -> dict:
+        """The generation commit protocol of ``compact`` and
+        ``_rewrite_base`` — each step leaves a consistent reader view
+        (see the class docstring):
+
+          1. cleanup sweep: leftovers of a crashed previous commit —
+             any non-live dir is by construction unreferenced by the
+             committed meta, so deleting it cannot change a reader's
+             view;
+          2. ``build(gen, merged_upto, superseded)`` returns the new
+             base's rows (key + payload columns), or an audit dict to
+             return with nothing written; ``superseded`` lists the
+             (epoch, dir) pairs the new generation replaces — the
+             current base plus every epoch in (merged_upto, upto_epoch];
+          3. sharded write to a tmp dir, renamed to ``epoch=-(gen+1)``;
+          4. ``compact_meta.gen=G+1.json`` — THE commit point;
+          5. delete the superseded metas and dirs.
+
+        Returns ``{"gen", "merged_upto"}`` of the committed generation."""
+        gen, merged_upto = self._compact_meta()
+        for d in _hadoop_glob(self.spark, os.path.join(self.base, "epoch=*")):
+            e = self._epoch_of(d)
+            if e is not None and not self._is_live(e, gen, merged_upto):
+                _hadoop_delete(self.spark, d)
+        tmp = os.path.join(self.base, self._TMP_DIR)
+        _hadoop_delete(self.spark, tmp)
+        superseded = [
+            (e, d)
+            for d in _hadoop_glob(self.spark, os.path.join(self.base, "epoch=*"))
+            if (e := self._epoch_of(d)) is not None
+            and ((gen > 0 and e == -gen) or merged_upto < e <= upto_epoch)
+        ]
+        df = build(gen, merged_upto, superseded)
+        if isinstance(df, dict):
+            return df
+        # the per-row epoch is dropped — the base's partition value
+        # (-gen) takes over, which keeps the ingest replay guard
+        # (epoch != batch_id) trivially true for base rows
+        self._write_sharded(df.drop("epoch", "shard"), tmp)
+        new_gen = gen + 1
+        _hadoop_rename(self.spark, tmp, os.path.join(self.base, f"epoch=-{new_gen}"))
+        # once this meta exists, readers switch to the new generation
+        # atomically (highest gen wins) — written via temp-then-rename so
+        # a crash can never leave a TORN json at the committed name
+        # shadowing the previous generation
+        _hadoop_write_text_atomic(
+            self.spark,
+            os.path.join(self.base, f"compact_meta.gen={new_gen}.json"),
+            json.dumps({"gen": new_gen, "merged_upto": upto_epoch, "version": 1}),
+        )
+        # superseded state — unreferenced now, deletable in any order
+        for _, d in superseded:
+            _hadoop_delete(self.spark, d)
+        for p in _hadoop_glob(
+            self.spark, os.path.join(self.base, "compact_meta.gen=*.json")
+        ):
+            m = re.search(r"compact_meta\.gen=(\d+)\.json$", p)
+            if m and int(m.group(1)) < new_gen:
+                _hadoop_delete(self.spark, p)
+        return {"gen": new_gen, "merged_upto": upto_epoch}
+
     def compact(self, upto_epoch: int, dedup: str | None = None) -> dict:
         """Merge every live epoch ≤ ``upto_epoch`` (plus the previous
         base generation) into one new base generation — one sorted
@@ -698,115 +754,49 @@ class ShardedEpochStore:
                       read through ``.distinct()``) — duplicate rows
                       collapse.
 
-        Protocol (each step leaves a consistent reader view, see the
-        class docstring): cleanup strays → write merged state to a tmp
-        dir → rename to ``epoch=-(gen+1)`` → write
-        ``compact_meta.gen=G+1.json`` (the commit point) → delete the
-        superseded meta/base/epoch dirs.  Returns an audit dict the
-        caller can persist."""
+        Commits through ``_commit_generation``.  Returns an audit dict
+        the caller can persist."""
         from pyspark.sql import functions as F
 
-        gen, merged_upto = self._compact_meta()
-        # cleanup sweep: leftovers of a crashed previous compaction —
-        # any non-live dir is by construction unreferenced by the
-        # committed meta, so deleting it cannot change a reader's view
-        for d in _hadoop_glob(self.spark, os.path.join(self.base, "epoch=*")):
-            e = self._epoch_of(d)
-            if e is not None and not self._is_live(e, gen, merged_upto):
-                _hadoop_delete(self.spark, d)
-        _hadoop_delete(self.spark, os.path.join(self.base, self._TMP_DIR))
-        if upto_epoch <= merged_upto:
-            return {
-                "gen": gen,
-                "merged_upto": merged_upto,
-                "epochs_merged": 0,
-                "skipped": "watermark already covers upto_epoch",
-            }
-        live = [
-            (self._epoch_of(d), d)
-            for d in _hadoop_glob(
-                self.spark, os.path.join(self.base, "epoch=*")
+        audit = {}
+
+        def build(gen, merged_upto, merge):
+            skipped = None
+            n_epochs = len([e for e, _ in merge if e >= 0])
+            if upto_epoch <= merged_upto:
+                skipped = "watermark already covers upto_epoch"
+            elif n_epochs == 0 or (n_epochs == 1 and gen == 0):
+                # nothing to merge, or a single uncompacted epoch — a
+                # rewrite would only churn bytes
+                skipped = "nothing to merge"
+            if skipped:
+                return {"gen": gen, "merged_upto": merged_upto,
+                        "epochs_merged": 0, "skipped": skipped}
+            src = self.spark.read.option("basePath", self.base).parquet(
+                *[d for _, d in merge]
             )
-        ]
-        merge = [
-            (e, d)
-            for e, d in live
-            if e is not None
-            and ((gen > 0 and e == -gen) or merged_upto < e <= upto_epoch)
-        ]
-        n_epochs = len([e for e, _ in merge if e >= 0])
-        if n_epochs == 0 or (n_epochs == 1 and gen == 0):
-            # nothing to merge, or a single uncompacted epoch — a
-            # rewrite would only churn bytes
-            return {
-                "gen": gen,
-                "merged_upto": merged_upto,
-                "epochs_merged": 0,
-                "skipped": "nothing to merge",
-            }
-        src = self.spark.read.option("basePath", self.base).parquet(
-            *[d for _, d in merge]
-        )
-        files_before = len(src.inputFiles())
-        data_cols = [c for c in src.columns if c not in ("epoch", "shard")]
-        if dedup == "latest":
-            # resolve to the row a read_resolved_for_keys would pick —
-            # per-row epoch is still available here (partition column)
-            others = [c for c in data_cols if c != self.key_col]
-            merged = (
-                src.groupBy(self.key_col)
-                .agg(
-                    F.max_by(F.struct(*others), F.col("epoch")).alias("_r")
+            audit.update(epochs_merged=n_epochs, files_before=len(src.inputFiles()))
+            data_cols = [c for c in src.columns if c not in ("epoch", "shard")]
+            if dedup == "latest":
+                # resolve to the row a read_resolved_for_keys would pick
+                # — per-row epoch is still available here (partition
+                # column)
+                others = [c for c in data_cols if c != self.key_col]
+                return (
+                    src.groupBy(self.key_col)
+                    .agg(F.max_by(F.struct(*others), F.col("epoch")).alias("_r"))
+                    .select(self.key_col, "_r.*")
                 )
-                .select(self.key_col, "_r.*")
-            )
-        elif dedup == "distinct":
-            merged = src.select(*data_cols).distinct()
-        elif dedup is None:
-            merged = src.drop("epoch", "shard")
-        else:
+            if dedup == "distinct":
+                return src.select(*data_cols).distinct()
+            if dedup is None:
+                return src
             raise ValueError(f"unknown dedup mode {dedup!r}")
-        tmp = os.path.join(self.base, self._TMP_DIR)
-        # same write shape as write_epoch: one writer per shard (no
-        # small-file explosion), key-sorted for row-group pruning; the
-        # per-row epoch is dropped — the base's partition value (-gen)
-        # takes over, which keeps the ingest replay guard
-        # (epoch != batch_id) trivially true for base rows
-        (
-            merged.withColumn("shard", self._shard_expr())
-            .repartition(F.col("shard"))
-            .sortWithinPartitions(self.key_col)
-            .write.partitionBy("shard")
-            .mode("overwrite")
-            .parquet(tmp)
-        )
-        new_gen = gen + 1
-        new_base = os.path.join(self.base, f"epoch=-{new_gen}")
-        _hadoop_rename(self.spark, tmp, new_base)
-        # THE commit point: once this meta exists, readers switch to
-        # the new generation atomically (highest gen wins) — written
-        # via temp-then-rename so a crash can never leave a TORN json
-        # at the committed name shadowing the previous generation
-        _hadoop_write_text_atomic(
-            self.spark,
-            os.path.join(self.base, f"compact_meta.gen={new_gen}.json"),
-            json.dumps(
-                {
-                    "gen": new_gen,
-                    "merged_upto": upto_epoch,
-                    "version": 1,
-                }
-            ),
-        )
-        # superseded state — unreferenced now, deletable in any order
-        for _, d in merge:
-            _hadoop_delete(self.spark, d)
-        for p in _hadoop_glob(
-            self.spark, os.path.join(self.base, "compact_meta.gen=*.json")
-        ):
-            m = re.search(r"compact_meta\.gen=(\d+)\.json$", p)
-            if m and int(m.group(1)) < new_gen:
-                _hadoop_delete(self.spark, p)
+
+        out = self._commit_generation(upto_epoch, build)
+        if "skipped" in out:
+            return out
+        new_base = os.path.join(self.base, f"epoch=-{out['gen']}")
         files_after = len(
             [
                 p
@@ -816,13 +806,7 @@ class ShardedEpochStore:
                 if not os.path.basename(p).startswith((".", "_"))
             ]
         )
-        return {
-            "gen": new_gen,
-            "merged_upto": upto_epoch,
-            "epochs_merged": n_epochs,
-            "files_before": files_before,
-            "files_after": files_after,
-        }
+        return {**out, **audit, "files_after": files_after}
 
 
 def _rewrite_base(store: ShardedEpochStore, df: DataFrame, upto_epoch: int) -> dict:
@@ -833,67 +817,38 @@ def _rewrite_base(store: ShardedEpochStore, df: DataFrame, upto_epoch: int) -> d
     moves shards and merged content differs from what compaction would
     have produced).
 
-    Same generation-versioned commit protocol as ``compact`` (cleanup
-    strays → tmp write → rename to ``epoch=-(gen+1)`` → atomic meta =
-    the commit point → delete superseded), so a crash at any step
+    Same generation commit as ``compact``
+    (``ShardedEpochStore._commit_generation``), so a crash at any step
     leaves a consistent reader view: before the meta commit readers
     still see the old generation; after it the migration is fully
     live.  Epochs ABOVE ``upto_epoch`` (in-flight) stay live and
-    unchanged.  ``df`` carries key + payload columns only (no
-    epoch/shard — the base partition value takes over, keeping the
-    ingest replay guard trivially true for base rows).
+    unchanged.  ``df``'s own epoch/shard columns, if any, are dropped.
 
     Module-level function rather than a method so the migration tool's
     dependency on store internals is explicit and greppable.
     """
-    from pyspark.sql import functions as F
+    replaced = []
 
-    gen, merged_upto = store._compact_meta()
-    for d in _hadoop_glob(store.spark, os.path.join(store.base, "epoch=*")):
-        e = store._epoch_of(d)
-        if e is not None and not store._is_live(e, gen, merged_upto):
-            _hadoop_delete(store.spark, d)
-    _hadoop_delete(store.spark, os.path.join(store.base, store._TMP_DIR))
-    superseded = [
-        d
-        for d in _hadoop_glob(store.spark, os.path.join(store.base, "epoch=*"))
-        if (e := store._epoch_of(d)) is not None
-        and ((gen > 0 and e == -gen) or merged_upto < e <= upto_epoch)
-    ]
-    drop = [c for c in ("epoch", "shard") if c in df.columns]
-    tmp = os.path.join(store.base, store._TMP_DIR)
-    (
-        df.drop(*drop)
-        .withColumn("shard", store._shard_expr())
-        .repartition(F.col("shard"))
-        .sortWithinPartitions(store.key_col)
-        .write.partitionBy("shard")
-        .mode("overwrite")
-        .parquet(tmp)
-    )
-    new_gen = gen + 1
-    new_base = os.path.join(store.base, f"epoch=-{new_gen}")
-    _hadoop_rename(store.spark, tmp, new_base)
-    _hadoop_write_text_atomic(
-        store.spark,
-        os.path.join(store.base, f"compact_meta.gen={new_gen}.json"),
-        json.dumps(
-            {"gen": new_gen, "merged_upto": upto_epoch, "version": 1}
-        ),
-    )
-    for d in superseded:
-        _hadoop_delete(store.spark, d)
-    for p in _hadoop_glob(
-        store.spark, os.path.join(store.base, "compact_meta.gen=*.json")
-    ):
-        m = re.search(r"compact_meta\.gen=(\d+)\.json$", p)
-        if m and int(m.group(1)) < new_gen:
-            _hadoop_delete(store.spark, p)
-    return {
-        "gen": new_gen,
-        "merged_upto": upto_epoch,
-        "dirs_replaced": len(superseded),
-    }
+    def build(gen, merged_upto, superseded):
+        replaced.extend(superseded)
+        return df
+
+    out = store._commit_generation(upto_epoch, build)
+    return {**out, "dirs_replaced": len(replaced)}
+
+
+def _require_iceberg(spark: SparkSession, catalog: str) -> None:
+    """Availability probe of both Iceberg stores: fail at construction,
+    not mid-run."""
+    try:
+        spark._jvm.java.lang.Class.forName("org.apache.iceberg.Table")
+    except Exception as e:
+        raise RuntimeError(
+            "Iceberg runtime not on the Spark classpath. Submit with "
+            "--packages org.apache.iceberg:iceberg-spark-runtime-3.5_2.12 "
+            f"and configure spark.sql.catalog.{catalog} "
+            "(org.apache.iceberg.spark.SparkCatalog)."
+        ) from e
 
 
 class IcebergStageStore(StageStore):
@@ -912,15 +867,7 @@ class IcebergStageStore(StageStore):
         namespace: str = "dude_spark",
     ):
         self.spark, self.catalog, self.namespace = spark, catalog, namespace
-        try:  # availability probe: fail at construction, not mid-run
-            spark._jvm.java.lang.Class.forName("org.apache.iceberg.Table")
-        except Exception as e:
-            raise RuntimeError(
-                "Iceberg runtime not on the Spark classpath. Submit with "
-                "--packages org.apache.iceberg:iceberg-spark-runtime-3.5_2.12 "
-                f"and configure spark.sql.catalog.{catalog} "
-                "(org.apache.iceberg.spark.SparkCatalog)."
-            ) from e
+        _require_iceberg(spark, catalog)
         spark.sql(
             f"CREATE NAMESPACE IF NOT EXISTS {catalog}.{namespace}"
         )
@@ -1039,33 +986,21 @@ class IcebergEpochStore:
             raise ValueError(f"n_shards must be >= 1, got {n_shards}")
         self.spark, self.key_col, self.n_shards = spark, key_col, n_shards
         self.table = f"{catalog}.{namespace}.{name}"
-        try:  # availability probe: fail at construction, not mid-run
-            spark._jvm.java.lang.Class.forName("org.apache.iceberg.Table")
-        except Exception as e:
-            raise RuntimeError(
-                "Iceberg runtime not on the Spark classpath. Submit with "
-                "--packages org.apache.iceberg:iceberg-spark-runtime-3.5_2.12 "
-                f"and configure spark.sql.catalog.{catalog} "
-                "(org.apache.iceberg.spark.SparkCatalog)."
-            ) from e
+        _require_iceberg(spark, catalog)
         spark.sql(f"CREATE NAMESPACE IF NOT EXISTS {catalog}.{namespace}")
 
     # the shard function must stay bit-identical between the two
     # store implementations (a divergence silently breaks key->shard
     # agreement when one is swapped for the other) — alias, like the
-    # latest-wins methods below, never copy
+    # latest-wins methods below, never copy; so is the write layout
     _shard_expr = ShardedEpochStore._shard_expr
+    _sharded = ShardedEpochStore._sharded
     shards_for = ShardedEpochStore.shards_for
 
     def write_epoch(self, df: DataFrame, epoch: int) -> None:
         from pyspark.sql import functions as F
 
-        out = (
-            df.withColumn("epoch", F.lit(int(epoch)))
-            .withColumn("shard", self._shard_expr())
-            .repartition(F.col("shard"))
-            .sortWithinPartitions(self.key_col)
-        )
+        out = self._sharded(df.withColumn("epoch", F.lit(int(epoch))))
         if not self.spark.catalog.tableExists(self.table):
             (
                 out.writeTo(self.table)

@@ -75,6 +75,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.components import connected_components
+from ..session import pin
 from ..storage import ShardedEpochStore
 
 ASSIGN_STORE = "assign"
@@ -107,7 +108,7 @@ def update_assignments(
     """Fold one epoch's verified pairs (a, b) into the incremental
     assignment state; returns an audit dict (delta row counts + the
     pruned-scan stats).  Caller contract: ``pairs`` is this epoch's
-    final pair table (bounded), ideally localCheckpointed — it feeds
+    final pair table (bounded), ideally pinned — it feeds
     several actions here."""
     merge_stats = None
     ids = (
@@ -120,9 +121,7 @@ def update_assignments(
     assign_scan = assign_store.scan_stats(raw_known, assign_shards)
     known = assign_store.resolve_latest(raw_known, exclude_epoch=epoch)
     if known is not None:
-        known = known.join(ids, "image_id", "leftsemi").localCheckpoint(
-            eager=True
-        )
+        known = pin(known.join(ids, "image_id", "leftsemi"))
         # collapse each endpoint to its component representative; an
         # unseen id represents itself
         ka = known.select(
@@ -147,7 +146,7 @@ def update_assignments(
     # delta CC input is bounded by the batch's pairs, so the driver
     # union-find fast path takes it in practice; checkpoint because
     # the result feeds two consumers (losers + new nodes)
-    delta = connected_components(edges).localCheckpoint(eager=True)
+    delta = pin(connected_components(edges))
     if known is not None:
         reps = known.select(
             F.col("cluster_id").alias("image_id")
@@ -163,7 +162,7 @@ def update_assignments(
             )
         )
         new_nodes = delta.join(reps, "image_id", "left_anti")
-        losers = losers.localCheckpoint(eager=True)
+        losers = pin(losers)
         # set-semantics read (NOT latest-wins — a cluster has many
         # member rows): pruned to the losing clusters' shards, own
         # epoch excluded, duplicates across epochs collapsed
@@ -173,7 +172,9 @@ def update_assignments(
         member_rows = members_store.read_for_shards(member_shards)
         members_scan = members_store.scan_stats(member_rows, member_shards)
         if member_rows is not None:
-            moved_keyed = (
+            # two consumers: the assignment delta and the merge-size
+            # audit below — materialize the membership lookup once
+            moved_keyed = pin(
                 member_rows.where(F.col("epoch") != F.lit(epoch))
                 .select("cluster_id", "image_id")
                 .distinct()
@@ -182,10 +183,6 @@ def update_assignments(
                     F.col("cluster_id") == F.col("old_cluster"),
                 )
                 .select("image_id", "old_cluster", "new_cluster")
-                # two consumers: the assignment delta and the merge-
-                # size audit below — materialize the membership lookup
-                # once
-                .localCheckpoint(eager=True)
             )
             # merge-size audit (the overcap-record convention applied
             # to the one unbounded-looking cost in the streaming path):
@@ -227,7 +224,7 @@ def update_assignments(
     else:
         assign_delta = delta
         members_scan = None
-    assign_delta = assign_delta.localCheckpoint(eager=True)
+    assign_delta = pin(assign_delta)
     assign_store.write_epoch(assign_delta, epoch)
     members_store.write_epoch(
         assign_delta.select("cluster_id", "image_id"), epoch

@@ -75,6 +75,7 @@ from ..detectors.suffix import (
 )
 from ..operators.candidates import pairs_from_buckets, pairs_vs_known
 from ..operators.verify import verify_jaccard
+from ..session import pin
 from ..storage import ShardedEpochStore
 
 BucketFn = Callable[[DataFrame], DataFrame]
@@ -320,7 +321,7 @@ def tilephash_hamming_ingest(
 
     Decode-once: bucket_fn and rows_fn both need the tile features of
     the SAME micro-batch frame; a per-batch memo (keyed on the batch
-    DataFrame's identity, holding one localCheckpointed feats frame)
+    DataFrame's identity, holding one pinned feats frame)
     makes the expensive decode pass run once per epoch regardless of
     how many consumers ask.
     """
@@ -340,11 +341,10 @@ def tilephash_hamming_ingest(
     def _feats(batch: DataFrame) -> DataFrame:
         if memo.get("key") is not batch:
             memo["key"] = batch
-            memo["df"] = (
+            memo["df"] = pin(
                 extract_tile_features(batch, grid)
                 .where(F.col("ok"))
                 .select("image_id", F.col("keys").alias("tile_keys"))
-                .localCheckpoint(eager=True)
             )
         return memo["df"]
 
@@ -650,15 +650,11 @@ def start_incremental_dedup(
             # the clean frame feeds three actions (signature chain,
             # rows-state write, verify rows) — checkpoint so the
             # gate's regex/quality expression chain runs once
-            batch_df = batch_df.localCheckpoint(eager=True)
+            batch_df = pin(batch_df)
         # checkpoint: pairs_from_buckets runs an eager skew-detection
         # action plus the pairs action — without this the detector's
         # signature UDF chain would run once per action
-        sigs = (
-            bucket_fn(batch_df)
-            .select("image_id", "bucket")
-            .localCheckpoint(eager=True)
-        )
+        sigs = pin(bucket_fn(batch_df).select("image_id", "bucket"))
         pairs, overcap, sig_scan = _batch_pairs(
             spark, sigs, sigs_store, batch_id, bucket_cap, overcap_mode
         )
@@ -667,7 +663,7 @@ def start_incremental_dedup(
             # pairs feed two consumers (the rows-shard probe and the
             # verify join) — checkpoint so the bucket joins run once;
             # bounded: this is the epoch's candidate-pair table
-            pairs = pairs.localCheckpoint(eager=True)
+            pairs = pin(pairs)
             # rows_fn: presets whose verification payload is DERIVED
             # (e.g. tilephash_hamming's per-image key arrays) project
             # the batch here; default is the raw-column selection.
@@ -694,7 +690,7 @@ def start_incremental_dedup(
         if assign_clusters:
             # the epoch's final pair table feeds the durable write AND
             # the incremental-assignment fold — materialize once
-            pairs = pairs.localCheckpoint(eager=True)
+            pairs = pin(pairs)
         pairs.write.mode("overwrite").parquet(
             os.path.join(pairs_path, f"epoch={batch_id}")
         )

@@ -43,6 +43,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import pin
 from ..storage import ShardedEpochStore, _rewrite_base
 
 
@@ -136,11 +137,11 @@ def migrate_embedding_centroids(
     # EXACTLY embedding_ingest's bucket chain — quantized u-frame, then
     # the integer-matmul assignment, bucket as string — so migrated
     # buckets and future stream epochs' buckets can never disagree
-    u = _u_frame(
+    u = pin(_u_frame(
         payload.select("image_id", "embedding").dropDuplicates(["image_id"]),
         "image_id",
         "embedding",
-    ).localCheckpoint(eager=True)
+    ))
     new_sigs = u.select(
         F.col("_id").alias("image_id"),
         assign(F.col("_u")).cast("string").alias("bucket"),

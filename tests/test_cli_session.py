@@ -96,6 +96,15 @@ def test_stream_flag_checks_run_before_the_session(monkeypatch, tmp_path):
     assert calls == []
 
 
+def test_sample_fractions_parse_before_the_session(monkeypatch):
+    calls = []
+    monkeypatch.setattr(cli, "get_spark", _recording_get_spark(calls))
+    with pytest.raises(ConfigError, match="--fractions entries"):
+        cli.main(["sample", "--input", "in", "--out", "out",
+                  "--fractions", "de:1.0", "--strata-col", "lang"])
+    assert calls == []
+
+
 def test_session_stops_once_on_error_and_on_early_return(
     spark, tmp_path, monkeypatch, capsys
 ):

@@ -97,7 +97,7 @@ def test_sessionize_bucketed_equals_plain(spark):
         assert got == want, f"bucket_seconds={bucket}"
 
 
-def test_sessionize_hot_user_bounded(spark):
+def test_sessionize_hot_user_bounded(spark, monkeypatch):
     """Planted single-user 10^6-event history: the bucketed path's
     event-level windows partition on (user, bucket) — no window task
     receives the full user (plan-asserted) — and the cross-bucket
@@ -121,17 +121,18 @@ def test_sessionize_hot_user_bounded(spark):
             F.lit(1.0).alias("value"),
         )
     )
-    from dude_spark.functions.events import _sessionize_impl
+    from dude_spark.functions import events as events_mod
 
-    # plan shape on the un-checkpointed twin (the checkpoint truncates
-    # the visible plan): event-level windows must slice by (_u, _b) — a
-    # spec partitioned by _u alone and ordered by _ats would stream the
-    # whole user through one task (the plain path's shape)
-    plan = (
-        _sessionize_impl(ev, 30, "ts", "user_id", "value", 3600,
-                         _checkpoint=False)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
+    # plan shape with pinning off (a pin truncates the visible plan to
+    # a Scan ExistingRDD): event-level windows must slice by (_u, _b) —
+    # a spec partitioned by _u alone and ordered by _ats would stream
+    # the whole user through one task (the plain path's shape)
+    with monkeypatch.context() as m:
+        m.setattr(events_mod, "pin", lambda df, eager=True: df)
+        plan = (
+            sessionize(ev, 30, "ts", "user_id", "value", 3600)
+            ._jdf.queryExecution().executedPlan().toString()
+        )
     assert not re.search(r"windowspecdefinition\(_u#\d+L?, _ats", plan), plan
     assert re.search(r"windowspecdefinition\(_u#\d+L?, _b#\d+L?, _ats", plan)
     out = sessionize(ev, bucket_seconds=3600)

@@ -129,6 +129,17 @@ def test_resume_skips_everything(first_run, spark):
     assert _assign_set(result2) == _assign_set(result1)
 
 
+def test_run_and_resume_list_stages_in_pipeline_order(first_run, spark):
+    """The stage table follows the pipeline, not the order the
+    concurrent detector chains finished in."""
+    result1, cfg = first_run
+    want = ["ids"] + [
+        f"{s}_{d}" for d in ALL for s in ("signatures", "candidates", "edges")
+    ] + ["components", "report"]
+    assert list(result1.stages) == want
+    assert list(run_pipeline(spark, cfg).stages) == want
+
+
 def test_resume_mid_run(first_run, spark):
     # simulate a kill after the detector stages: later stages lose
     # their manifests, earlier ones keep them
