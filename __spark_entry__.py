@@ -1532,24 +1532,30 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     The driver evaluates the first 50 entries in dict order.  Queries are
     therefore ordered least-recently-driver-checked first: the 8 queries
-    that CORRECTNESS_r04 dropped (led by contam_scores/cross_dedup_pairs,
-    never driver-checked before round 5) lead, then the 50 r04-covered
-    queries in their prior relative order.  Future rounds: rotate again —
-    move whichever tail entries missed the latest CORRECTNESS artifact to
-    the front.
+    that CORRECTNESS_r05 dropped (the dedup_assignments … minhash_lsh_pairs
+    tail of the r05 order) lead, then the 50 r05-covered queries in their
+    prior relative order.  Future rounds: rotate again — move whichever
+    tail entries missed the latest CORRECTNESS artifact to the front.
     """
     return {
-        # --- never driver-checked before round 5 ---
+        # --- dropped by the r05 50-query window ---
+        "dedup_assignments": q_dedup_assignments,
+        "dup_group_sizes": q_dup_group_sizes,
+        "dedup_impact": q_dedup_impact,
+        "rep_selection": q_rep_selection,
+        "deduped_docs": q_deduped_docs,
+        "embedding_topk": q_embedding_topk,
+        "embedding_dup_pairs": q_embedding_dup_pairs,
+        "minhash_lsh_pairs": q_minhash_pairs,
+        # --- r05-covered queries, prior relative order ---
         "contam_scores": q_contam_scores,
         "cross_dedup_pairs": q_cross_dedup,
-        # --- covered in r03 but dropped by the r04 50-query window ---
         "simhash_pairs": q_simhash_pairs,
         "substring_pairs": q_substring_pairs,
         "decontam_pairs": q_decontam_pairs,
         "hamming_pairs": q_hamming_pairs,
         "semantic_dedup": q_semantic_dedup,
         "ann_topk": q_ann_topk,
-        # --- r04-covered queries, prior relative order ---
         "exact_dup_groups": q_exact_dup_groups,
         "doc_fingerprint": q_doc_fingerprint,
         "token_stats": q_token_stats,
@@ -1592,14 +1598,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "containment_pairs": q_containment_pairs,
         "top_docs_per_source": q_top_docs_per_source,
         "snapshot_diff": q_snapshot_diff,
-        "dedup_assignments": q_dedup_assignments,
-        "dup_group_sizes": q_dup_group_sizes,
-        "dedup_impact": q_dedup_impact,
-        "rep_selection": q_rep_selection,
-        "deduped_docs": q_deduped_docs,
-        "embedding_topk": q_embedding_topk,
-        "embedding_dup_pairs": q_embedding_dup_pairs,
-        "minhash_lsh_pairs": q_minhash_pairs,
     }
 
 

@@ -122,16 +122,6 @@ class JobConfig:
     cpus: int = 0                          # ≅ CPUs (0 → all available)
     buf_size: int = DEFAULT_BUF_SIZE       # ≅ BufSize → Arrow batch rows
     detectors: tuple[str, ...] = ("exact",)  # subset of {exact,minhash,simhash,suffix}
-    # id dictionary encoding (operators/ids.py): "auto" turns the
-    # string→dense-long key mapping on when the input reaches
-    # id_encoding_min_rows (probed with a bounded limit().count(), so
-    # the probe costs the same at 10^12 rows as at 10^5); "on"/"off"
-    # force it.  Below the threshold the mapping-join overhead exceeds
-    # the shuffle-width savings (measured at n=20k); above it the
-    # narrower exploded-bucket shuffle dominates (round-2 stage
-    # anatomy: ~3× on the widest shuffle at n=600k).
-    id_encoding: str = "auto"
-    id_encoding_min_rows: int = 100_000
     bucket_cap: int = 64                   # max bucket size fully paired (then chained)
     run_id: str = "run"
     minhash: MinHashConfig = dataclasses.field(default_factory=MinHashConfig)
@@ -158,10 +148,6 @@ class JobConfig:
         cfg.buf_size = min(cfg.buf_size, MAX_BUF_SIZE)  # resolver.go:78
         if cfg.bucket_cap < 2:
             raise ConfigError("bucket_cap must be >= 2")
-        if cfg.id_encoding not in ("auto", "on", "off"):
-            raise ConfigError(
-                f"id_encoding must be auto/on/off, got {cfg.id_encoding!r}"
-            )
         return cfg
 
     def config_id(self, detector: str) -> str:

@@ -41,7 +41,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .session import pin
-from .storage import StageRunner, StageStore, frame_fingerprint
+from .storage import (
+    StageRunner,
+    StageStore,
+    _hadoop_write_text_atomic,
+    frame_fingerprint,
+)
 
 
 def _audit(workdir: str, name: str, df: DataFrame) -> None:
@@ -182,13 +187,13 @@ def curate(
             mixed, fractions = mix_corpus(
                 src, mix_weights, source_col, id_col="image_id"
             )
-            with open(
-                os.path.join(workdir, "audits", "mix_fractions.json"), "w"
-            ) as f:
-                json.dump(fractions, f)
+            _hadoop_write_text_atomic(
+                spark,
+                os.path.join(workdir, "audits", "mix_fractions.json"),
+                json.dumps(fractions),
+            )
             return mixed
 
-        os.makedirs(os.path.join(workdir, "audits"), exist_ok=True)
         current = run(
             "mixed", _mix,
             {"weights": mix_weights, "source_col": source_col},

@@ -87,14 +87,14 @@ def decode(data: bytes) -> tuple[np.ndarray, str]:
     w, h = struct.unpack("<HH", bytes(data[4:8]))
     expected = h * w * 3
     if expected == 0:
-        # a zero-area image has no pixels to operate on — resize would
-        # index an empty axis, features would be NaN means
+        # a zero-area image has no pixels to operate on — features
+        # would be NaN means
         raise CodecError("zero-area image")
-    # Decompression-bomb guard (same contract as mediacodec's audio
-    # path): the header is ATTACKER-CONTROLLED, so (a) reject sizes no
-    # real payload of this length could inflate to (zlib tops out near
-    # ~1032:1), and (b) hard-cap the decompressor at expected+1 bytes
-    # so a lying stream can't allocate past the claim either way.
+    # Decompression-bomb guard: the header is ATTACKER-CONTROLLED, so
+    # (a) reject sizes no real payload of this length could inflate to
+    # (zlib tops out near ~1032:1), and (b) hard-cap the decompressor
+    # at expected+1 bytes so a lying stream can't allocate past the
+    # claim either way.
     if expected > len(data) * 1100:
         raise CodecError(
             f"implausible dimensions {w}x{h} for a {len(data)}-byte payload"

@@ -349,30 +349,34 @@ def pairs_vs_known(
 
 
 def cross_corpus_pairs(
-    known_buckets: DataFrame,
+    known_buckets: DataFrame | None,
     new_buckets: DataFrame,
     bucket_cap: int = 64,
     overcap_mode: str = "star",
 ) -> tuple[DataFrame, DataFrame]:
-    """Incremental BATCH dedup: candidate pairs for a new batch against
-    an existing corpus — within-new pairs plus new-vs-known pairs,
-    never within-known ("dedupe this month's crawl against everything
+    """Incremental dedup: candidate pairs for a new batch against an
+    existing corpus — within-new pairs plus new-vs-known pairs, never
+    within-known ("dedupe this month's crawl against everything
     already ingested, without re-pairing the old side").
 
-    The batch twin of the streaming micro-batch join (streaming/
-    ingest._batch_pairs shares :func:`pairs_vs_known`), for users whose
-    increments arrive as whole tables rather than a stream.  Both
+    The one composition for both increment shapes: batch callers pass
+    whole tables, and the streaming micro-batch join (streaming/
+    ingest._batch_pairs) passes its shard-pruned state read.  Both
     inputs are (image_id, bucket) frames from any detector's bucket
-    stage.  Returns ``(pairs, overcap)`` where overcap carries
-    (bucket, bucket_size, side∈{batch,known}) for the lineage sink —
-    both cap mechanisms record, never silently truncate.  Pair
-    orientation: within-new pairs are (a<b); cross pairs are
-    (a=known, b=new); callers needing one namespace normalize with
-    least/greatest.
+    stage; ``known_buckets=None`` means no known corpus yet (a
+    stream's first epoch), so only within-new pairs come back.
+    Returns ``(pairs, overcap)`` where overcap carries (bucket,
+    bucket_size, side∈{batch,known}) for the lineage sink — both cap
+    mechanisms record, never silently truncate.  Pair orientation:
+    within-new pairs are (a<b); cross pairs are (a=known, b=new);
+    callers needing one namespace normalize with least/greatest.
     """
-    vs_known, known_rows = pairs_vs_known(
-        new_buckets, known_buckets, bucket_cap
-    )
+    if known_buckets is not None:
+        vs_known, known_rows = pairs_vs_known(
+            new_buckets, known_buckets, bucket_cap
+        )
+    else:
+        vs_known, known_rows = None, []
     vs_new, overcap_batch = pairs_from_buckets(
         new_buckets, bucket_cap, overcap_mode
     )
@@ -387,4 +391,5 @@ def cross_corpus_pairs(
                 schema=overcap.schema,
             )
         )
-    return vs_new.unionByName(vs_known).distinct(), overcap
+    pairs = vs_new if vs_known is None else vs_new.unionByName(vs_known)
+    return pairs.distinct(), overcap

@@ -1,16 +1,13 @@
-"""Multimodal column operators: decode, feature-extract, resize, sample.
+"""Multimodal column operators: decode, feature-extract, quality, tile-phash.
 
-Treats image/audio/video payloads as opaque ``binary`` columns with
-typed metadata (the input_hint schema), processed in Arrow batches via
+Treats image payloads as opaque ``binary`` columns with typed metadata
+(the input_hint schema), processed in Arrow batches via
 ``mapInPandas`` — the Spark-side plumbing (schemas, batching,
 partition preservation, skip-and-count error handling) is real and
 tested.  The pixel codec is the deterministic container codec from
-``imagecodec`` (real lossy/lossless semantics), and audio/video use
-the sibling deterministic containers in ``mediacodec`` (DWAV PCM,
-DVID length-prefixed frame packets); swapping in Pillow / soundfile /
-pyav for production is a per-codec body change behind the same
-signatures (module docstrings).  The feature DSP (RMS, zero
-crossings, channel means, phash) operates on decoded samples/pixels
+``imagecodec`` (real lossy/lossless semantics); swapping in Pillow for
+production is a codec body change behind the same signatures.  The
+feature math (channel means, std, phash) operates on decoded pixels
 and is production-real regardless of codec.
 
 Error contract everywhere: undecodable rows never fail the job — they
@@ -28,7 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..imagecodec import CodecError, decode, encode, phash64
+from ..imagecodec import CodecError, decode, phash64
 from ..session import pin
 
 DECODED_SCHEMA = (
@@ -163,130 +160,6 @@ def image_quality(
             )
 
     return images.select("image_id", "bytes").mapInPandas(run, IMAGE_QUALITY_SCHEMA)
-
-
-def resize_images(images: DataFrame, out_w: int, out_h: int) -> DataFrame:
-    """Deterministic nearest-neighbor resize, re-encoded in the source
-    format → (image_id, bytes, w, h, fmt, ok).  Undecodable rows pass
-    through with ok=false and null bytes.  Formats the container codec
-    cannot write (a real WebP/BMP decoded via the Pillow fallback)
-    re-encode as png — a decodable image must never come back
-    ok=false just because its source format has no encoder here."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..imagecodec import MAGIC
-
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples():
-                try:
-                    pix, fmt = decode(bytes(r.bytes) if r.bytes is not None else b"")
-                    h, w = pix.shape[:2]
-                    yi = (np.arange(out_h) * h // out_h).clip(0, h - 1)
-                    xi = (np.arange(out_w) * w // out_w).clip(0, w - 1)
-                    out = pix[yi][:, xi]
-                    enc_fmt = fmt if fmt in MAGIC else "png"
-                    rows.append(
-                        (r.image_id, encode(out, enc_fmt), out_w, out_h,
-                         enc_fmt, True)
-                    )
-                except CodecError:
-                    rows.append((r.image_id, None, None, None, None, False))
-            yield pd.DataFrame(
-                rows, columns=["image_id", "bytes", "w", "h", "fmt", "ok"]
-            )
-
-    return images.select("image_id", "bytes").mapInPandas(
-        run, "image_id string, bytes binary, w int, h int, fmt string, ok boolean"
-    )
-
-
-# ------------------------------------------------------- audio / video
-
-AUDIO_FEATURES_SCHEMA = (
-    "clip_id string, ok boolean, duration_s double, rms double, "
-    "zero_crossings long"
-)
-VIDEO_FRAMES_SCHEMA = (
-    "video_id string, frame_idx int, frame_bytes binary, ts_ms long, ok boolean"
-)
-
-
-def extract_audio_features(clips: DataFrame) -> DataFrame:
-    """(clip_id, bytes) → AUDIO_FEATURES_SCHEMA, one row per clip.
-
-    Decodes the deterministic DWAV container (mediacodec — swap
-    ``decode_audio`` for soundfile/ffmpeg in production behind the same
-    signature); the feature DSP (duration, RMS, zero crossings) is
-    production-real vectorized numpy.  Undecodable clips → ok=false,
-    never fatal."""
-    from ..mediacodec import audio_features, decode_audio
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples():
-                try:
-                    samples, rate = decode_audio(
-                        bytes(r.bytes) if r.bytes is not None else b""
-                    )
-                    dur, rms, zc = audio_features(samples, rate)
-                    rows.append((r.clip_id, True, dur, rms, zc))
-                except CodecError:
-                    rows.append((r.clip_id, False, None, None, None))
-            yield pd.DataFrame(
-                rows,
-                columns=["clip_id", "ok", "duration_s", "rms", "zero_crossings"],
-            )
-
-    return clips.select("clip_id", "bytes").mapInPandas(run, AUDIO_FEATURES_SCHEMA)
-
-
-def sample_video_frames(videos: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """(video_id, bytes) → one row per sampled frame, frames re-encoded
-    with the image codec so downstream image operators (decode_images,
-    extract_features, the D2 phash channel) consume them unchanged.
-
-    Demuxes the deterministic DVID container (mediacodec — swap
-    ``decode_video`` for pyav/ffmpeg in production behind the same
-    signature); frames stream one at a time, so a long clip never
-    holds all its pixels in memory.  Sampling keeps the first frame
-    at/after each ``every_ms`` boundary (boundaries are MULTIPLES of
-    every_ms, not offsets from the last kept frame — anchoring to the
-    kept frame would drift on irregular timestamps).  Undecodable
-    videos emit ONE ok=false row (skip-and-count, partial frames of a
-    mid-stream corruption are discarded) instead of failing the job;
-    a DECODABLE zero-frame video emits no rows at all — count inputs
-    upstream if per-video accounting must reconcile."""
-    from ..mediacodec import decode_video
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples():
-                start = len(rows)
-                try:
-                    frames, _fps = decode_video(
-                        bytes(r.bytes) if r.bytes is not None else b""
-                    )
-                    next_ts = 0
-                    for idx, (ts_ms, pixels) in enumerate(frames):
-                        if ts_ms < next_ts:
-                            continue
-                        next_ts = (ts_ms // every_ms + 1) * every_ms
-                        rows.append(
-                            (r.video_id, idx, encode(pixels, "jpeg"),
-                             ts_ms, True)
-                        )
-                except CodecError:
-                    del rows[start:]  # drop this video's partial frames
-                    rows.append((r.video_id, None, None, None, False))
-            yield pd.DataFrame(
-                rows,
-                columns=["video_id", "frame_idx", "frame_bytes", "ts_ms", "ok"],
-            )
-
-    return videos.select("video_id", "bytes").mapInPandas(run, VIDEO_FRAMES_SCHEMA)
 
 
 TILE_FEATURES_SCHEMA = "image_id string, ok boolean, keys array<long>"

@@ -38,7 +38,6 @@ boundary.
 from __future__ import annotations
 
 import dataclasses
-import os
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
@@ -61,7 +60,16 @@ from .storage import (  # noqa: F401 — CancelledRun re-exported for callers
     StageRunner,
     StageStore,
     input_fingerprint,
+    mark_cancelled,
 )
+
+
+# Input size at which run_pipeline switches to the long-keyed plan
+# (operators/ids.py).  Below it the mapping-join overhead exceeds the
+# shuffle-width savings (measured at n=20k); above it the narrower
+# exploded-bucket shuffle dominates (round-2 stage anatomy: ~3× on the
+# widest shuffle at n=600k).
+ID_ENCODING_MIN_ROWS = 100_000
 
 
 @dataclasses.dataclass
@@ -92,8 +100,7 @@ def cancel_run(
     stay checkpointed, so a resume picks up where the cancel landed.
     """
     if checkpoint_dir:
-        with open(os.path.join(checkpoint_dir, "CANCEL"), "w") as f:
-            f.write(run_id)
+        mark_cancelled(spark, checkpoint_dir, run_id)
     spark.sparkContext.cancelJobGroup(_job_group(run_id))
 
 
@@ -301,17 +308,12 @@ def run_pipeline(
     # and CC round downstream is keyed by 8-byte longs instead of id
     # strings — ~3× narrower rows on the pipeline's widest shuffles.
     # Built BEFORE the concurrent detector chains (they all read it).
-    # cfg.id_encoding="auto" sizes the decision with a BOUNDED probe
-    # (limit n+1, never a full count — same cost at 10^12 rows): below
-    # the threshold the mapping joins cost more than narrow shuffles
-    # save, so small inputs keep the direct string-keyed plan.
-    if cfg.id_encoding == "auto":
-        probe = cfg.id_encoding_min_rows
-        use_iid = (
-            images.select("image_id").limit(probe).count() >= probe
-        )
-    else:
-        use_iid = cfg.id_encoding == "on"
+    # The decision is sized with a BOUNDED probe (limit n, never a full
+    # count — same cost at 10^12 rows): below ID_ENCODING_MIN_ROWS the
+    # mapping joins cost more than narrow shuffles save, so small
+    # inputs keep the direct string-keyed plan.
+    probe = ID_ENCODING_MIN_ROWS
+    use_iid = images.select("image_id").limit(probe).count() >= probe
     # stages keyed by long iids (candidates, edges, components) carry
     # use_iid in their params and the ids stage upstream, so a
     # string-keyed checkpoint never resumes into the long-keyed plan

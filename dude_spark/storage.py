@@ -41,6 +41,7 @@ import threading
 import time
 import uuid
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 
 from .lineage import flush_records, partition_count_rows
@@ -79,7 +80,11 @@ class StageStore(abc.ABC):
 
 
 class ParquetManifestStore(StageStore):
-    """Parquet dir + JSON sidecar under ``<root>/stages/<stage>``."""
+    """Parquet dir + JSON sidecar under ``<root>/stages/<stage>``.
+
+    Data and sidecars both go through the Hadoop FileSystem API, so
+    ``root`` may be a plain path or any Hadoop URI (``file://``,
+    ``hdfs://``) and a manifest always sits on its data's filesystem."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark, self.root = spark, root
@@ -98,26 +103,25 @@ class ParquetManifestStore(StageStore):
         return self.spark.read.parquet(self.path(stage))
 
     def exists(self, stage: str) -> bool:
-        return os.path.exists(self.path(stage))
+        return _hadoop_exists(self.spark, self.path(stage))
 
     def manifest(self, stage: str) -> dict | None:
+        # absent, torn, or failing its .crc check all read as "no
+        # manifest": the stage recomputes, which is always safe
         try:
-            with open(self._manifest_path(stage)) as f:
-                return json.load(f)
-        except (OSError, json.JSONDecodeError):
+            return json.loads(
+                _hadoop_read_text(self.spark, self._manifest_path(stage))
+            )
+        except (Py4JJavaError, ValueError):
             return None
 
     def publish_manifest(self, stage: str, meta: dict) -> None:
-        mp = self._manifest_path(stage)
-        with open(mp + ".tmp", "w") as f:
-            json.dump(meta, f)
-        os.replace(mp + ".tmp", mp)  # atomic publish
+        _hadoop_write_text_atomic(
+            self.spark, self._manifest_path(stage), json.dumps(meta)
+        )
 
     def clear_manifest(self, stage: str) -> None:
-        try:
-            os.remove(self._manifest_path(stage))
-        except OSError:
-            pass
+        _hadoop_delete(self.spark, self._manifest_path(stage))
 
 
 class CancelledRun(RuntimeError):
@@ -190,6 +194,16 @@ def frame_fingerprint(spark: SparkSession, df: DataFrame) -> str:
     return f"rows:{r['h']}:{r['n']}"
 
 
+def _cancel_marker(root: str) -> str:
+    return os.path.join(root, "CANCEL")
+
+
+def mark_cancelled(spark: SparkSession, root: str, run_id: str) -> None:
+    """Write the sticky CANCEL marker the stage runner checks at every
+    stage boundary (``pipeline.cancel_run``)."""
+    _hadoop_write_text(spark, _cancel_marker(root), run_id)
+
+
 class StageRunner:
     """The one checkpointed stage runner, used by ``run_pipeline`` and
     ``curate``: DuDe's row cache (recompute only what is new or
@@ -223,12 +237,8 @@ class StageRunner:
         self._metrics: list[tuple] = []
         self._lineage: list[tuple] = []
         self._lock = threading.Lock()
-        os.makedirs(root, exist_ok=True)
         # a fresh run (or resume) clears any stale cancel marker
-        try:
-            os.remove(os.path.join(root, "CANCEL"))
-        except FileNotFoundError:
-            pass
+        _hadoop_delete(spark, _cancel_marker(root))
 
     def run(
         self,
@@ -243,7 +253,7 @@ class StageRunner:
         ``upstream`` names the stages it reads."""
         # sticky-cancel check at every stage boundary (≅ ctx polls,
         # reference hashing.go:58-70)
-        if os.path.exists(os.path.join(self.root, "CANCEL")):
+        if _hadoop_exists(self.spark, _cancel_marker(self.root)):
             raise CancelledRun(f"run cancelled before stage {stage}")
         blob = json.dumps(
             [stage, params, self.input_fp, [self._keys[u] for u in upstream]],
@@ -315,6 +325,11 @@ def _hadoop_fs(spark: SparkSession, path: str):
     jvm = spark._jvm
     p = jvm.org.apache.hadoop.fs.Path(path)
     return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
+def _hadoop_exists(spark: SparkSession, path: str) -> bool:
+    fs, p = _hadoop_fs(spark, path)
+    return bool(fs.exists(p))
 
 
 def _hadoop_delete(spark: SparkSession, path: str) -> None:

@@ -13,5 +13,3 @@ from .ingest import (  # noqa: F401
     tilephash_ingest,
 )
 from .migrate import migrate_embedding_centroids  # noqa: F401
-from .monitor import hot_bucket_alerts  # noqa: F401
-from .windows import start_session_stats, start_windowed_stats  # noqa: F401

@@ -28,16 +28,18 @@ against the row payloads; the columns verification needs
 (``state_cols``, captions by default) are persisted per epoch so
 new-vs-known pairs can be verified without re-reading old inputs.
 
-Scale notes: the within-batch join goes through
-``operators.candidates.pairs_from_buckets`` — the same skew-capped
-path as batch (one hot bucket inside a micro-batch degrades to star
-edges instead of an O(b²) self-join).  The new-vs-known join is
-bucket-equi against the known-sigs table (batch side is small — AQE
-broadcasts it) with its own per-bucket cap on the KNOWN side, the
-side that grows without bound across epochs (see ``_batch_pairs``);
-every capped bucket is recorded durably under ``overcap/epoch=N``,
-never silent.  The sigs/rows state lives in a ``ShardedEpochStore``
-(storage.py): key-sharded under each epoch partition, so a
+Scale notes: both joins go through
+``operators.candidates.cross_corpus_pairs``, the batch incremental-
+dedup operator.  Its within-batch join is ``pairs_from_buckets``, the
+same skew-capped path as batch (one hot bucket inside a micro-batch
+degrades to star edges instead of an O(b²) self-join).  Its
+new-vs-known join is bucket-equi against the known-sigs table (batch
+side is small — AQE broadcasts it) with its own per-bucket cap on the
+KNOWN side, the side that grows without bound across epochs (see
+``_batch_pairs``); every capped bucket is recorded durably under
+``overcap/epoch=N``, never silent.  The sigs/rows state lives in a
+``ShardedEpochStore`` (storage.py): key-sharded under each epoch
+partition, so a
 micro-batch opens ONLY the shard directories its keys hash into —
 state I/O per epoch is O(batch-touched shards), never O(accumulated
 corpus) — with a per-epoch prune audit under ``scans/``.  State
@@ -73,7 +75,7 @@ from ..detectors.suffix import (
     suffix_signatures,
     verify_substring,
 )
-from ..operators.candidates import pairs_from_buckets, pairs_vs_known
+from ..operators.candidates import cross_corpus_pairs
 from ..operators.verify import verify_jaccard
 from ..session import pin
 from ..storage import ShardedEpochStore
@@ -83,7 +85,6 @@ VerifyFn = Callable[[DataFrame, DataFrame], DataFrame]
 
 
 def _batch_pairs(
-    spark: SparkSession,
     sigs: DataFrame,
     sigs_store: ShardedEpochStore,
     batch_id: int,
@@ -92,32 +93,20 @@ def _batch_pairs(
 ) -> tuple[DataFrame, DataFrame, dict]:
     """New duplicate pairs from one micro-batch's signatures:
     new-vs-known (bucket join against state) + new-vs-new (within
-    batch, skew-capped via pairs_from_buckets), oriented
-    (existing, newcomer) for the cross-epoch side.  Rows this same
-    epoch wrote on a previous failed attempt are excluded from `known`
-    via the epoch partition column — a replay must not see its own
-    output.
+    batch), composed by ``candidates.cross_corpus_pairs`` — the batch
+    incremental-dedup operator, so both caps and their recorded
+    ``overcap`` rows (bucket, bucket_size, side∈{batch,known}) are one
+    implementation.  Cross-epoch pairs are oriented (existing,
+    newcomer).  Rows this same epoch wrote on a previous failed
+    attempt are excluded from `known` via the epoch partition column —
+    a replay must not see its own output.
 
-    Returns ``(pairs, overcap)``.  Both joins are capped, and every
-    cap is RECORDED, never silent (the batch pipeline's own contract):
-
-    - within batch, ``pairs_from_buckets`` (default ``overcap_mode=
-      "star"``) degrades an over-cap bucket to star edges around its
-      min id — each member still surfaces in at least one pair, but
-      member×member pairs are not enumerated.  Pass ``overcap_mode=
-      "exhaustive"`` when the pairs table itself is the product (every
-      in-bucket pair enumerated via the salted grid, at O(b²/epoch)
-      cost for a hot bucket);
-    - new-vs-known, the known side grows without bound across epochs
-      (a boilerplate-caption bucket accumulates members forever), so a
-      bucket whose KNOWN membership exceeds ``bucket_cap`` is joined
-      through its min known id only — O(batch) rows per epoch instead
-      of O(batch × corpus).  The cut is a map-side-combinable
-      aggregate, no window, so one pathological bucket never owns a
-      single fat task.
-
-    ``overcap`` lists every capped bucket as (bucket, bucket_size,
-    side∈{batch,known}); the caller persists it per epoch.
+    ``overcap_mode`` is the within-batch cap: ``"star"`` (default)
+    degrades an over-cap bucket to star edges around its min id;
+    ``"exhaustive"`` enumerates every in-bucket pair through the
+    salted grid, for when the pairs table itself is the product.  The
+    known side, which grows without bound across epochs, always joins
+    an over-cap bucket through its min known id only.
 
     Returns ``(pairs, overcap, scan_stats)`` — ``scan_stats`` is the
     prune audit for the state read (files opened vs files in state).
@@ -134,43 +123,15 @@ def _batch_pairs(
     shards = sigs_store.shards_for(sigs.select("bucket"))
     known_all = sigs_store.read_for_shards(shards)
     scan = sigs_store.scan_stats(known_all, shards)
-    overcap_known_rows: list = []
+    known = None
     if known_all is not None:
         known = known_all.where(F.col("epoch") != F.lit(batch_id)).select(
             "image_id", "bucket"
         )
-        # the capped new-vs-known join is candidates.pairs_vs_known
-        # (ONE implementation of the cross-corpus cap semantics, shared
-        # with the batch cross_corpus_pairs operator): known side
-        # restricted to the batch's buckets, over-cap known buckets
-        # joined through their min id, skew aggregate collected eagerly
-        # so the pairs action scans the multi-TB sigs state ONCE
-        vs_known, overcap_known_rows = pairs_vs_known(
-            sigs.select("image_id", "bucket"),
-            known,
-            bucket_cap,
-            context=f"micro-batch {batch_id}",
-        )
-    else:
-        vs_known = None
-    vs_new, overcap_batch = pairs_from_buckets(
-        sigs.select("image_id", "bucket"), bucket_cap, overcap_mode
+    pairs, overcap = cross_corpus_pairs(
+        known, sigs.select("image_id", "bucket"), bucket_cap, overcap_mode
     )
-    overcap = overcap_batch.select(
-        "bucket", "bucket_size", F.lit("batch").alias("side")
-    )
-    if overcap_known_rows:
-        overcap = overcap.unionByName(
-            spark.createDataFrame(
-                [
-                    (r["bucket"], r["bucket_size"], "known")
-                    for r in overcap_known_rows
-                ],
-                schema=overcap.schema,
-            )
-        )
-    out = vs_new if vs_known is None else vs_new.unionByName(vs_known)
-    return out.distinct(), overcap, scan
+    return pairs, overcap, scan
 
 
 def minhash_ingest(
@@ -656,7 +617,7 @@ def start_incremental_dedup(
         # signature UDF chain would run once per action
         sigs = pin(bucket_fn(batch_df).select("image_id", "bucket"))
         pairs, overcap, sig_scan = _batch_pairs(
-            spark, sigs, sigs_store, batch_id, bucket_cap, overcap_mode
+            sigs, sigs_store, batch_id, bucket_cap, overcap_mode
         )
         rows_scan = None
         if verify_fn is not None:

@@ -1,4 +1,4 @@
-"""Multimodal operators: decode/features/resize + audio/video plumbing."""
+"""Multimodal image operators: decode, features, quality, tile-phash."""
 
 from __future__ import annotations
 
@@ -7,20 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from dude_spark.imagecodec import decode
-from dude_spark.mediacodec import (
-    decode_audio,
-    decode_video,
-    encode_audio,
-    encode_video,
-)
-from dude_spark.operators.multimodal import (
-    AUDIO_FEATURES_SCHEMA,
-    decode_images,
-    extract_audio_features,
-    extract_features,
-    resize_images,
-    sample_video_frames,
-)
+from dude_spark.operators.multimodal import decode_images, extract_features
 
 
 def test_decode_images_skip_and_count(spark, images_df, fixture_pdf):
@@ -63,105 +50,6 @@ def test_extract_features_matches_phash_column(spark, images_df, fixture_pdf):
         assert 0.0 <= ok.loc[i, "brightness"] <= 255.0
 
 
-def test_resize_images(spark, images_df):
-    out = resize_images(images_df, 16, 16).toPandas()
-    ok = out[out.ok]
-    assert len(ok) > 500
-    row = ok.iloc[0]
-    pix, fmt = decode(bytes(row["bytes"]))
-    assert pix.shape == (16, 16, 3)
-    assert fmt == row["fmt"]
-
-
-def _sine_clip(freq_hz: float, seconds: float, rate: int = 8000) -> bytes:
-    t = np.arange(int(rate * seconds)) / rate
-    pcm = (0.5 * 32767 * np.sin(2 * np.pi * freq_hz * t)).astype(np.int16)
-    return encode_audio(pcm, rate)
-
-
-def test_audio_codec_roundtrip_and_errors():
-    pcm = (np.arange(-100, 100) * 50).astype(np.int16)
-    samples, rate = decode_audio(encode_audio(pcm, 16000))
-    assert rate == 16000 and np.array_equal(samples, pcm)  # lossless
-    from dude_spark.imagecodec import CodecError
-
-    for bad in (b"", b"nope", b"DWAV\x00\x00", encode_audio(pcm, 16000)[:-3]):
-        with pytest.raises(CodecError):
-            decode_audio(bad)
-
-    # decompression bomb: tiny blob claiming 4 samples but compressing
-    # 10 MB — must be rejected via bounded decompression, never ballooned
-    import struct
-    import zlib
-
-    bomb = b"DWAV" + struct.pack("<ii", 8000, 4) + zlib.compress(b"\x00" * 10**7)
-    with pytest.raises(CodecError):
-        decode_audio(bomb)
-
-    # declared-length bomb (ADVICE r2): a ~60-byte blob claiming n=2^31-1
-    # over a high-ratio stream must be rejected BEFORE decompression —
-    # the old guard allocated up to 2n+1 ≈ 4 GB first
-    declared = b"DWAV" + struct.pack("<ii", 8000, 2**31 - 1) + zlib.compress(
-        b"\x00" * 4096
-    )
-    with pytest.raises(CodecError, match="implausible"):
-        decode_audio(declared)
-    # absolute clip ceiling applies even with a plausibly-sized payload
-    from dude_spark.mediacodec import MAX_AUDIO_SAMPLES
-
-    over = b"DWAV" + struct.pack("<ii", 8000, MAX_AUDIO_SAMPLES + 1) + b"x" * 64
-    with pytest.raises(CodecError, match="implausible"):
-        decode_audio(over)
-
-
-def test_extract_audio_features(spark):
-    clips = spark.createDataFrame(
-        [
-            ("a440", _sine_clip(440.0, 2.0)),
-            ("a10", _sine_clip(10.0, 1.0)),
-            ("bad", b"not audio at all"),
-        ],
-        "clip_id string, bytes binary",
-    )
-    out = {r["clip_id"]: r for r in extract_audio_features(clips).collect()}
-    assert [f.name for f in extract_audio_features(clips).schema.fields] == [
-        "clip_id", "ok", "duration_s", "rms", "zero_crossings",
-    ]
-    a = out["a440"]
-    assert a["ok"] and abs(a["duration_s"] - 2.0) < 1e-9
-    assert abs(a["rms"] - 0.5 / np.sqrt(2)) < 0.01  # full-scale/2 sine RMS
-    # a sine at f Hz crosses zero ~2·f·duration times
-    assert abs(a["zero_crossings"] - 2 * 440 * 2.0) <= 4
-    assert abs(out["a10"]["zero_crossings"] - 2 * 10 * 1.0) <= 2
-    assert not out["bad"]["ok"]  # skip-and-count, job did not fail
-
-
-def test_sample_video_frames(spark):
-    rs = np.random.RandomState(5)
-    frames = [
-        (rs.randint(0, 255, (8, 8, 3))).astype(np.uint8) for _ in range(10)
-    ]
-    blob = encode_video(frames, fps=5)  # ts = 0,200,...,1800 ms
-    frame_iter, fps = decode_video(blob)  # frames decode LAZILY
-    assert fps == 5 and len(list(frame_iter)) == 10
-    vids = spark.createDataFrame(
-        [("v1", blob), ("bad", b"garbage")], "video_id string, bytes binary"
-    )
-    rows = sample_video_frames(vids, every_ms=1000).collect()
-    ok = sorted(
-        [r for r in rows if r["video_id"] == "v1"], key=lambda r: r["frame_idx"]
-    )
-    # one frame at/after each 1000ms boundary: ts 0 and ts 1000 (idx 5)
-    assert [(r["frame_idx"], r["ts_ms"]) for r in ok] == [(0, 0), (5, 1000)]
-    # sampled frames are image-codec packets consumable downstream,
-    # within lossy quantization error of the source frame
-    pix, fmt = decode(bytes(ok[1]["frame_bytes"]))
-    assert fmt == "jpeg" and pix.shape == (8, 8, 3)
-    assert np.abs(pix.astype(int) - frames[5].astype(int)).max() <= 4
-    bad = [r for r in rows if r["video_id"] == "bad"]
-    assert len(bad) == 1 and not bad[0]["ok"]
-
-
 @pytest.mark.skipif(
     not __import__("dude_spark.imagecodec", fromlist=["HAVE_PIL"]).HAVE_PIL,
     reason="Pillow not installed in this sandbox",
@@ -183,46 +71,20 @@ def test_real_png_decodes_through_pil_shim():
     assert fmt == "png" and np.array_equal(pixels, arr)
 
 
-@pytest.mark.skipif(
-    not __import__("dude_spark.mediacodec", fromlist=["HAVE_SOUNDFILE"]).HAVE_SOUNDFILE,
-    reason="soundfile not installed in this sandbox",
-)
-def test_real_wav_decodes_through_soundfile_shim():
-    import io
-
-    import numpy as np
-    import soundfile as sf
-
-    from dude_spark.mediacodec import decode_audio
-
-    samples = (np.sin(np.linspace(0, 40, 8000)) * 10000).astype(np.int16)
-    buf = io.BytesIO()
-    sf.write(buf, samples, 16000, format="WAV", subtype="PCM_16")
-    got, rate = decode_audio(buf.getvalue())
-    assert rate == 16000 and np.array_equal(got, samples)
-
-
 def test_non_container_bytes_still_raise_without_real_codecs():
-    """In this sandbox (no PIL/soundfile/av) the fallthrough must stay
-    a clean CodecError, preserving skip-and-count."""
-    from dude_spark import imagecodec, mediacodec
+    """Without Pillow the fallthrough must stay a clean CodecError,
+    preserving skip-and-count."""
+    from dude_spark import imagecodec
 
     blob = b"\x89PNG\r\n\x1a\nnot really a png but real magic padding"
     if not imagecodec.HAVE_PIL:
         with pytest.raises(imagecodec.CodecError):
             imagecodec.decode(blob)
-    if not mediacodec.HAVE_SOUNDFILE:
-        with pytest.raises(imagecodec.CodecError):
-            mediacodec.decode_audio(b"RIFFxxxxWAVEfmt padding padding")
-    if not mediacodec.HAVE_AV:
-        with pytest.raises(imagecodec.CodecError):
-            mediacodec.decode_video(b"\x00\x00\x00 ftypisom padding padding")
 
 
 def test_image_decompression_bomb_rejected():
     """A tiny blob claiming huge dimensions must raise CodecError
-    before allocating the claimed pixels (same contract as the audio
-    bomb guard)."""
+    before allocating the claimed pixels."""
     import struct as _struct
     import zlib as _zlib
 
@@ -260,7 +122,6 @@ def test_zero_area_and_oversize_images_are_codec_errors(spark):
     import zlib as _zlib
 
     from dude_spark import imagecodec
-    from dude_spark.operators.multimodal import resize_images
 
     zero = (
         imagecodec.MAGIC["png"]
@@ -271,53 +132,15 @@ def test_zero_area_and_oversize_images_are_codec_errors(spark):
         imagecodec.decode(zero)
     # through the operator: ok=false row, not an IndexError job failure
     df = spark.createDataFrame([("z", zero)], "image_id string, bytes binary")
-    rows = resize_images(df, 4, 4).collect()
+    rows = decode_images(df).collect()
     assert len(rows) == 1 and not rows[0]["ok"]
+    assert "zero-area" in rows[0]["err"]
     # encode: dimensions beyond the u16 container range raise
     # CodecError, not struct.error escaping the skip-and-count handler
     with pytest.raises(imagecodec.CodecError, match="out of range"):
         imagecodec.encode(
             np.zeros((1, 70000, 3), dtype=np.uint8), "png"
         )
-
-
-def test_video_boundary_sampling_and_partial_discard(spark):
-    """Sampling anchors to every_ms MULTIPLES (a kept frame at 1100
-    must not push the next boundary to 2100), and a mid-stream
-    corruption discards the video's partial frames for ONE ok=false
-    row."""
-    import struct as _struct
-
-    from dude_spark.mediacodec import VIDEO_MAGIC, encode_video
-    from dude_spark.operators.multimodal import sample_video_frames
-
-    rs = np.random.RandomState(9)
-    frames = [rs.randint(0, 255, (4, 4, 3)).astype(np.uint8) for _ in range(21)]
-    # fps=10 → ts = 0,100,...,2000; boundaries at 0,1000,2000 keep
-    # idx 0, 10, 20 (anchor-to-kept would drift if ts were irregular)
-    blob = encode_video(frames, fps=10)
-
-    # corrupt container: valid header claiming 2 frames, second packet
-    # truncated → the first frame decodes, then CodecError mid-stream
-    f0 = encode_video(frames[:1], fps=10)
-    corrupt = (
-        VIDEO_MAGIC
-        + _struct.pack("<ii", 10, 2)
-        + f0[12:]                      # frame 0's (len, packet)
-        + _struct.pack("<i", 99999)    # frame 1 claims bytes that aren't there
-    )
-    vids = spark.createDataFrame(
-        [("good", blob), ("cut", corrupt)], "video_id string, bytes binary"
-    )
-    rows = sample_video_frames(vids, every_ms=1000).collect()
-    good = sorted(
-        [r for r in rows if r["video_id"] == "good"], key=lambda r: r["frame_idx"]
-    )
-    assert [(r["frame_idx"], r["ts_ms"]) for r in good] == [
-        (0, 0), (10, 1000), (20, 2000)
-    ]
-    cut = [r for r in rows if r["video_id"] == "cut"]
-    assert len(cut) == 1 and not cut[0]["ok"]
 
 
 def test_image_quality_cascade(spark):

@@ -15,12 +15,21 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from dude_spark import pipeline
 from dude_spark.config import JobConfig, MinHashConfig
 from dude_spark.fixtures import IMAGES_COLUMNS
 from dude_spark.lineage import read_lineage, read_metrics
 from dude_spark.pipeline import run_pipeline
 
 ALL = ("exact", "minhash", "simhash", "suffix")
+
+
+@pytest.fixture
+def long_keyed(monkeypatch):
+    """Force the dictionary-encoded layout at fixture size (the input
+    is far below ID_ENCODING_MIN_ROWS, which keeps strings); tests that
+    resume ``first_run``'s checkpoint need the plan it was built with."""
+    monkeypatch.setattr(pipeline, "ID_ENCODING_MIN_ROWS", 1)
 
 
 @pytest.fixture(scope="module")
@@ -41,11 +50,10 @@ def first_run(spark, input_dir, tmp_path_factory):
         results_dir=str(work / "results"),
         detectors=ALL,
         run_id="r1",
-        # force the dictionary-encoded layout at fixture size (auto
-        # would keep strings below id_encoding_min_rows)
-        id_encoding="on",
     )
-    return run_pipeline(spark, cfg), cfg
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(pipeline, "ID_ENCODING_MIN_ROWS", 1)
+        return run_pipeline(spark, cfg), cfg
 
 
 def _assign_set(result):
@@ -104,9 +112,9 @@ def test_hot_path_stages_are_long_keyed(first_run, spark):
 def test_id_encoding_off_produces_identical_assignments(
     first_run, spark, input_dir, tmp_path_factory
 ):
-    """id_encoding is a physical-layout choice, never a semantic one:
-    the string-keyed plan (auto below threshold / off) must yield the
-    exact same assignment set as the long-keyed fixture run."""
+    """id encoding is a physical-layout choice, never a semantic one:
+    the string-keyed plan (input below ID_ENCODING_MIN_ROWS) must yield
+    the exact same assignment set as the long-keyed fixture run."""
     import dataclasses
 
     result_on, cfg_on = first_run
@@ -115,21 +123,22 @@ def test_id_encoding_off_produces_identical_assignments(
         cfg_on,
         checkpoint_dir=str(work / "ckpt"),
         results_dir=str(work / "results"),
-        id_encoding="auto",  # fixture is far below min_rows → strings
     )
     result_off = run_pipeline(spark, cfg)
     assert "ids" not in result_off.stages
     assert _assign_set(result_off) == _assign_set(result_on)
 
 
-def test_resume_skips_everything(first_run, spark):
+def test_resume_skips_everything(first_run, spark, long_keyed):
     result1, cfg = first_run
     result2 = run_pipeline(spark, cfg)
     assert all(info.skipped for info in result2.stages.values()), result2.stages
     assert _assign_set(result2) == _assign_set(result1)
 
 
-def test_run_and_resume_list_stages_in_pipeline_order(first_run, spark):
+def test_run_and_resume_list_stages_in_pipeline_order(
+    first_run, spark, long_keyed
+):
     """The stage table follows the pipeline, not the order the
     concurrent detector chains finished in."""
     result1, cfg = first_run
@@ -140,7 +149,7 @@ def test_run_and_resume_list_stages_in_pipeline_order(first_run, spark):
     assert list(run_pipeline(spark, cfg).stages) == want
 
 
-def test_resume_mid_run(first_run, spark):
+def test_resume_mid_run(first_run, spark, long_keyed):
     # simulate a kill after the detector stages: later stages lose
     # their manifests, earlier ones keep them
     result1, cfg = first_run
@@ -154,7 +163,7 @@ def test_resume_mid_run(first_run, spark):
     assert _assign_set(result2) == want
 
 
-def test_config_change_invalidates_stage(first_run, spark):
+def test_config_change_invalidates_stage(first_run, spark, long_keyed):
     result1, cfg = first_run
     import dataclasses
 
@@ -198,6 +207,33 @@ def test_bucket_cap_change_recomputes_candidates_and_downstream(
         stage = f"candidates_{d}"
         assert r2.stages[stage].rows == cold.stages[stage].rows, stage
     assert _assign_set(r2) == _assign_set(cold)
+
+
+def test_uri_checkpoint_root_runs_and_resumes(
+    spark, input_dir, tmp_path, monkeypatch
+):
+    """A checkpoint root given as a URI keeps the stage data and the
+    runner's own files (manifests, CANCEL marker) on one filesystem:
+    the run completes, its resume skips every stage, and nothing lands
+    in a relative ``file:`` directory under the working directory."""
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    cfg = JobConfig(
+        input_paths=(input_dir,),
+        checkpoint_dir=(tmp_path / "ck").as_uri(),
+        detectors=("exact", "minhash"),
+        run_id="uri",
+    )
+    first = run_pipeline(spark, cfg)
+    want = _assign_set(first)
+    assert not any(info.skipped for info in first.stages.values())
+    again = run_pipeline(spark, cfg)
+    assert all(info.skipped for info in again.stages.values()), again.stages
+    assert _assign_set(again) == want
+    manifest = tmp_path / "ck" / "stages" / "components.manifest.json"
+    assert json.loads(manifest.read_text())["rows"] == len(want)
+    assert list(cwd.iterdir()) == []
 
 
 def test_empty_input_early_exit(spark, tmp_path_factory):
