@@ -22,14 +22,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dude_spark.config import MinHashConfig, SimHashConfig, SuffixConfig
-from dude_spark.detectors.minhash import minhash_buckets, minhash_signatures
-from dude_spark.detectors.simhash import (
-    pigeonhole_key_array,
-    simhash_buckets,
-    simhash_pairs_verified,
-    simhash_signatures,
-)
-from dude_spark.detectors.suffix import suffix_buckets, suffix_signatures, verify_substring
+from dude_spark.detectors import DETECTORS
+from dude_spark.detectors.simhash import pigeonhole_key_array
 from dude_spark.functions.embedding import ann_topk, brute_force_topk, cosine_dup_pairs
 from dude_spark.functions.events import (
     asof_join,
@@ -76,11 +70,7 @@ from dude_spark.operators.textdedup import (
     dedup_lines,
     ngram_jaccard_pairs,
 )
-from dude_spark.operators.verify import (
-    prefilter_minhash,
-    verify_hamming,
-    verify_jaccard,
-)
+from dude_spark.operators.verify import verify_hamming
 
 STOPWORD_SQL = "('a','the','and','of','to','in')"
 
@@ -1175,6 +1165,26 @@ def _plant_near_dups(
     return docs.unionByName(planted)
 
 
+def _detector_pairs(docs, name, cfg):
+    """The registry chain of detector ``name`` (detectors.DETECTORS,
+    the one run_pipeline runs) with exhaustive over-cap pairing,
+    canonicalized for the oracles.
+
+    Eager pin of the UDF signatures: pairs_from_buckets runs a
+    skew-detection action plus the pairs action, and the verify
+    (MinHash prefilter, SimHash Hamming recheck) re-reads sigs —
+    without a checkpoint each action re-runs the signature UDF chain.
+    (A lazy persist() on buckets was A/B-measured round 3 and LOST:
+    its first-action cache fill cost more than the checkpoint barrier
+    in every pairing — 46/42 s vs 32/31 s walls.)"""
+    det = DETECTORS[name]
+    sigs = pin(det.signatures(docs, cfg))
+    pairs, _ = pairs_from_buckets(
+        det.buckets(sigs, cfg), bucket_cap=64, overcap_mode="exhaustive"
+    )
+    return _canon_pairs(det.verify(pairs, docs, sigs, cfg))
+
+
 def q_minhash_pairs(spark, sf_dir):
     """D1 MinHash-LSH + exact-Jaccard verify on document text (rows-only:
     LSH candidate generation is probabilistic; the verify floor is the
@@ -1183,27 +1193,10 @@ def q_minhash_pairs(spark, sf_dir):
     10 planted (id, id+200000) pairs on top of the corpus's organic
     near-dups."""
     docs = _plant_near_dups(_docs_as_images(spark, sf_dir))
-    cfg = MinHashConfig()
-    # eager pin of the UDF signatures: pairs_from_buckets
-    # runs a skew-detection action plus the pairs action, and the
-    # prefilter + verify re-read sigs — without a checkpoint each
-    # action re-runs the signature UDF chain.  (A lazy persist() on
-    # buckets was A/B-measured round 3 and LOST: its first-action
-    # cache fill cost more than the checkpoint barrier in every
-    # pairing — 46/42 s vs 32/31 s walls.)
-    sigs = pin(minhash_signatures(docs, cfg))
-    pairs, _ = pairs_from_buckets(
-        minhash_buckets(sigs), bucket_cap=64, overcap_mode="exhaustive"
-    )
-    # sketch-estimate prefilter drops the LSH false-positive bulk
-    # (119,731 → ~10^3 here) before the caption attach; survivors
-    # still face the exact verify (operators/verify.py docs)
-    pairs = prefilter_minhash(
-        pairs, sigs, cfg.jaccard_threshold, cfg.num_hashes,
-        cfg.prefilter_margin_sigmas,
-    )
-    out = verify_jaccard(pairs, docs, cfg.shingle_k, cfg.jaccard_threshold)
-    return _canon_pairs(out)
+    # the registry verify's sketch-estimate prefilter drops the LSH
+    # false-positive bulk (119,731 → ~10^3 here) before the caption
+    # attach; survivors still face the exact verify
+    return _detector_pairs(docs, "minhash", MinHashConfig())
 
 
 def q_simhash_pairs(spark, sf_dir):
@@ -1216,17 +1209,7 @@ def q_simhash_pairs(spark, sf_dir):
     banding/bucketing/verify machinery; near-dup TOLERANCE is gated by
     tests/test_simhash.py recall over the planted fixture corpus."""
     docs = _plant_near_dups(_docs_as_images(spark, sf_dir), tail=None)
-    cfg = SimHashConfig(use_phash=False)
-    # eager checkpoint on SIGS: the Hamming verify re-reads the
-    # signature table, so pinning the sig level serves all three
-    # consumers (overcap collect, pairing, verify) with one UDF pass
-    # (lazy persist A/B-measured round 3: never faster, see minhash)
-    sigs = pin(simhash_signatures(docs, cfg))
-    pairs, _ = pairs_from_buckets(
-        simhash_buckets(sigs, cfg), bucket_cap=64, overcap_mode="exhaustive"
-    )
-    out = simhash_pairs_verified(pairs, sigs, cfg)
-    return _canon_pairs(out)
+    return _detector_pairs(docs, "simhash", SimHashConfig(use_phash=False))
 
 
 def q_substring_pairs(spark, sf_dir):
@@ -1238,13 +1221,7 @@ def q_substring_pairs(spark, sf_dir):
     substring, which DuckDB brute-forces as a distinct-32-gram
     self-join at sf0.01 (500 docs)."""
     docs = _docs_as_images(spark, sf_dir)
-    cfg = SuffixConfig(min_match_len=32)
-    sigs = pin(suffix_signatures(docs, cfg))
-    pairs, _ = pairs_from_buckets(
-        suffix_buckets(sigs), bucket_cap=64, overcap_mode="exhaustive"
-    )
-    out = verify_substring(pairs, docs, cfg)
-    return _canon_pairs(out)
+    return _detector_pairs(docs, "suffix", SuffixConfig(min_match_len=32))
 
 
 # 3 bits spread across distinct 8-bit segments (5, 23, 58) — within the

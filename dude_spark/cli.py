@@ -642,24 +642,6 @@ def _config_from_args(a: argparse.Namespace) -> JobConfig:
     ).validated()
 
 
-def _stream_config_id(detector: str, det_cfg) -> str:
-    """Deterministic id of the stream's bucket/verify configuration —
-    the streaming twin of JobConfig.config_id, pinned in the state
-    dir's meta so a detector swap on accumulated state is refused
-    (incompatible bucket keys = silent cross-epoch recall loss)."""
-    import dataclasses
-    import hashlib
-    import json as _json
-
-    sub: dict = {"detector": detector}
-    if isinstance(det_cfg, dict):
-        sub.update(det_cfg)
-    elif det_cfg is not None:
-        sub.update(dataclasses.asdict(det_cfg))
-    blob = _json.dumps(sub, sort_keys=True).encode()
-    return hashlib.sha256(blob).hexdigest()[:16]
-
-
 def _parse_share_list(spec: str, flag: str) -> dict[str, float]:
     """'name=number,...' → dict, with ConfigError naming the flag —
     shared by the mix and sample subcommands."""
@@ -744,35 +726,27 @@ def _check_tiles(grid: int, radius: int, segments: int, prefix: str) -> None:
             )
 
 
-def _text_preset(a: argparse.Namespace):
-    """``(config, (bucket_fn, verify_fn, state_cols))`` of the MinHash,
-    suffix or SimHash ingest preset named by ``a.detector`` — shared by
-    stream and dedup-new, so both read --minhash-threshold and
-    --min-match-len the same way."""
+def _detector_config(a: argparse.Namespace):
+    """The registry detector config ``a.detector`` names, from the
+    flags stream and dedup-new share (--minhash-threshold,
+    --min-match-len); None for exact."""
     if a.detector == "minhash":
-        from .streaming import minhash_ingest
-
-        mh = (
+        return (
             MinHashConfig(jaccard_threshold=a.minhash_threshold)
             if a.minhash_threshold is not None
             else MinHashConfig()
         )
-        return mh, minhash_ingest(mh)
     if a.detector == "suffix":
-        from .streaming import suffix_ingest
-
-        sx = (
+        return (
             SuffixConfig(min_match_len=a.min_match_len)
             if a.min_match_len is not None
             else SuffixConfig()
         )
-        return sx, suffix_ingest(sx)
-    from .streaming import simhash_ingest
-
-    # the preset's own default: caption channel only (a bytes-less text
-    # stream carries no phash column)
-    sh_cfg = SimHashConfig(use_phash=False)
-    return sh_cfg, simhash_ingest(sh_cfg)
+    if a.detector == "simhash":
+        # caption channel only: a bytes-less text stream carries no
+        # phash column
+        return SimHashConfig(use_phash=False)
+    return None
 
 
 def _centroid_pin(cent, threshold_x1000: int) -> dict:
@@ -881,8 +855,10 @@ def _cmd_curate(a: argparse.Namespace) -> int:
 def _cmd_migrate_centroids(a: argparse.Namespace) -> int:
     import numpy as _np
 
+    from .detectors import config_id
+
     def _emb_cfg_id(path: str) -> str:
-        return _stream_config_id(
+        return config_id(
             "embedding", _centroid_pin(_np.load(path), a.sem_threshold)
         )
 
@@ -949,15 +925,42 @@ def _stream_detector(a: argparse.Namespace) -> tuple[object, dict]:
             cent, threshold_x1000=a.sem_threshold
         )
         det_cfg = _centroid_pin(cent, a.sem_threshold)
-    elif a.detector in ("minhash", "simhash", "suffix"):
-        det_cfg, (bucket_fn, verify_fn, state_cols) = _text_preset(a)
     else:
-        return None, {}
+        from .streaming import detector_ingest
+
+        det_cfg = _detector_config(a)
+        bucket_fn, verify_fn, state_cols = detector_ingest(a.detector, det_cfg)
     return det_cfg, dict(
         bucket_fn=bucket_fn,
         verify_fn=verify_fn,
         state_cols=state_cols,
     )
+
+
+def _check_stream_schema(spark, input_dir: str, ddl: str) -> None:
+    """Refuse a --schema whose column types disagree with the parquet
+    files already in --input, before the stream starts: the file
+    source would otherwise fail inside the first micro-batch.  Columns
+    the files lack are not checked (they read as null), and an input
+    dir with no parquet files yet has nothing to check."""
+    from pyspark.sql.types import StructType
+
+    from .storage import _hadoop_glob
+
+    if not _hadoop_glob(spark, os.path.join(input_dir, "*.parquet")):
+        return
+    held = {
+        f.name.lower(): f.dataType.simpleString()
+        for f in spark.read.parquet(input_dir).schema
+    }
+    for f in StructType.fromDDL(ddl):
+        want = f.dataType.simpleString()
+        if held.get(f.name.lower(), want) != want:
+            raise ConfigError(
+                f"--schema declares column {f.name!r} as {want}, but the "
+                f"parquet files in {input_dir} hold "
+                f"{held[f.name.lower()]}"
+            )
 
 
 def _cmd_stream(a: argparse.Namespace) -> int:
@@ -969,7 +972,9 @@ def _cmd_stream(a: argparse.Namespace) -> int:
             "(.npy from 'cluster --save-centroids')"
         )
     with _session(a, "dude_spark_stream") as spark:
+        _check_stream_schema(spark, a.input, a.schema)
         det_cfg, kw = _stream_detector(a)
+        from .detectors import config_id
         from .streaming import start_incremental_dedup
 
         q = start_incremental_dedup(
@@ -980,7 +985,7 @@ def _cmd_stream(a: argparse.Namespace) -> int:
             n_state_shards=a.n_state_shards,
             compact_every=a.compact_every,
             assign_clusters=a.assign_clusters,
-            state_config_id=_stream_config_id(a.detector, det_cfg),
+            state_config_id=config_id(a.detector, det_cfg),
             **kw,
         )
         q.awaitTermination()
@@ -1392,11 +1397,11 @@ def _cmd_ann_build(a: argparse.Namespace) -> int:
         # (re)build leaves an index ann-query REFUSES (no manifest),
         # never a stale half-index served silently
         store.clear_manifest("ann_cells")
-        assigned = store.write(
+        store.write(
             ann_assign(embs, cent, a.assign_cells, a.id_col, a.vec_col),
             "ann_cells",
         )
-        n_rows = assigned.count()
+        n_rows = store.read("ann_cells").count()
         os.makedirs(a.index_dir, exist_ok=True)
         _np.save(os.path.join(a.index_dir, "centroids.npy"), cent)
         store.publish_manifest(
@@ -1481,27 +1486,25 @@ def _cmd_dedup_new(a: argparse.Namespace) -> int:
     with _session(a, "dude_spark_dedup_new") as spark:
         from pyspark.sql import functions as F
 
+        from .detectors import DETECTORS
         from .operators.candidates import cross_corpus_pairs
+        from .streaming import detector_ingest
+
+        det_cfg = _detector_config(a)
+        source = {"bytes": a.bytes_col, "caption": a.text_col}
 
         def load(path):
             df = spark.read.parquet(path)
-            payload = (
-                F.col(a.bytes_col).alias("bytes")
-                if a.detector == "exact"
-                else F.col(a.text_col).alias("caption")
-            )
             return df.select(
                 F.col(a.id_col).cast("string").alias("image_id"),
-                payload,
+                *(
+                    F.col(source[c]).alias(c)
+                    for c in DETECTORS[a.detector].reads(det_cfg)
+                ),
             )
 
         known, new = load(a.corpus), load(a.new)
-        if a.detector == "exact":
-            from .detectors.exact import exact_buckets as bucket_fn
-
-            verify_fn = None
-        else:
-            _, (bucket_fn, verify_fn, _) = _text_preset(a)
+        bucket_fn, verify_fn, _ = detector_ingest(a.detector, det_cfg)
         kb, nb = bucket_fn(known), bucket_fn(new)
         if a.detector != "exact":
             # pandas-UDF signature chains + the eager skew probes

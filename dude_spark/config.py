@@ -10,16 +10,14 @@ internal/handlers/validation/resolver.go:13-82 and validator.go:17-47:
 Here the "directories" generalize to input table paths, the SQLite cache
 dir to a checkpoint root, and ParanoidMode to the verify stage.  All
 hash-family seeds are part of the config and feed a deterministic
-``config_id`` so signatures are cache-addressed by configuration
-(SURVEY.md §4: "deterministic seeds for all hash families,
-config-addressed").
+``detectors.config_id`` so signatures are cache-addressed by
+configuration (SURVEY.md §4: "deterministic seeds for all hash
+families, config-addressed").
 """
 
 from __future__ import annotations
 
 import dataclasses
-import hashlib
-import json
 import os
 
 
@@ -136,8 +134,10 @@ class JobConfig:
         for p in cfg.input_paths:
             if not os.path.exists(p):
                 raise ConfigError(f"input path does not exist: {p}")
-        known = {"exact", "minhash", "simhash", "suffix"}
-        bad = set(cfg.detectors) - known
+        # imported here: the detector modules import this module
+        from .detectors import DETECTORS
+
+        bad = set(cfg.detectors) - set(DETECTORS)
         if bad:
             raise ConfigError(f"unknown detectors: {sorted(bad)}")
         max_cpus = os.cpu_count() or 1
@@ -149,20 +149,3 @@ class JobConfig:
         if cfg.bucket_cap < 2:
             raise ConfigError("bucket_cap must be >= 2")
         return cfg
-
-    def config_id(self, detector: str) -> str:
-        """Deterministic id of one detector's full hash configuration.
-
-        Signatures in the checkpoint table are keyed by this so a config
-        change invalidates the cache the way a file mtime/size change
-        invalidates the reference's row cache (hashing.go:84-88).
-        """
-        sub: dict = {"detector": detector}
-        if detector == "minhash":
-            sub.update(dataclasses.asdict(self.minhash))
-        elif detector == "simhash":
-            sub.update(dataclasses.asdict(self.simhash))
-        elif detector == "suffix":
-            sub.update(dataclasses.asdict(self.suffix))
-        blob = json.dumps(sub, sort_keys=True).encode()
-        return hashlib.sha256(blob).hexdigest()[:16]

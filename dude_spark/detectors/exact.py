@@ -21,8 +21,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-NAME = "exact"
-
 
 def exact_buckets(images: DataFrame, include_caption: bool = False) -> DataFrame:
     """images → (image_id, bucket) where bucket = sha2 of content.

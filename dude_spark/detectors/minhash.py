@@ -54,7 +54,6 @@ from pyspark.sql import functions as F
 
 from ..config import MinHashConfig
 
-NAME = "minhash"
 
 _P31 = (1 << 31) - 1  # Mersenne prime modulus for universal hashing
 _POLY_B = np.uint64(1099511628211)  # FNV-64 prime as polynomial base

@@ -44,7 +44,6 @@ from pyspark.sql import functions as F
 
 from ..config import SimHashConfig
 
-NAME = "simhash"
 
 _POLY_B = np.uint64(1099511628211)  # FNV-64 prime, same base as D1
 

@@ -44,8 +44,6 @@ from pyspark.sql import functions as F
 from ..config import SuffixConfig
 from ..suffixarray import winnow
 
-NAME = "suffix"
-
 
 def gram_size(min_match_len: int) -> int:
     """Winnowing g-gram width for threshold L.

@@ -44,15 +44,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .config import JobConfig
-from .detectors import exact as d_exact
-from .detectors import minhash as d_minhash
-from .detectors import simhash as d_simhash
-from .detectors import suffix as d_suffix
+from .detectors import DETECTORS, config_id
 from .operators.candidates import pairs_from_buckets
 from .operators.components import connected_components
 from .operators.ids import decode_keys, encode_ids, encode_keys
 from .operators.report import assignments_to_report, write_csv_report
-from .operators.verify import prefilter_minhash, verify_exact, verify_jaccard
 from .session import pin
 from .storage import (  # noqa: F401 — CancelledRun re-exported for callers
     CancelledRun,
@@ -115,83 +111,12 @@ def load_images(spark: SparkSession, cfg: JobConfig) -> DataFrame:
 
 # ---------------------------------------------------------------- detectors
 
-def _row_fp(detector: str):
-    """Cheap per-row content fingerprint for the incremental cache —
-    hashes exactly the columns the detector's signature reads (the
-    (size, mtime) stat proxy of hashing.go:73-88; our schema has no
-    mtime, so content columns are hashed directly — for caption
-    detectors this skips the expensive Python-UDF recompute, for
-    `exact` it degenerates to the same cost as the signature itself
-    and is kept only for uniformity)."""
-    if detector == "exact":
-        return F.xxhash64("bytes")
-    if detector == "simhash":
-        return F.xxhash64("caption", "phash")
-    return F.xxhash64("caption")  # minhash, suffix
-
-
-def _signatures(images: DataFrame, detector: str, cfg: JobConfig) -> DataFrame:
-    if detector == "exact":
-        return d_exact.exact_buckets(images).withColumnRenamed("bucket", "sig")
-    if detector == "minhash":
-        return d_minhash.minhash_signatures(images, cfg.minhash)
-    if detector == "simhash":
-        return d_simhash.simhash_signatures(images, cfg.simhash)
-    if detector == "suffix":
-        return d_suffix.suffix_signatures(images, cfg.suffix)
-    raise ValueError(detector)
-
-
-def _buckets(signatures: DataFrame, detector: str, cfg: JobConfig) -> DataFrame:
-    if detector == "exact":
-        return signatures.select("image_id", F.col("sig").alias("bucket"))
-    if detector == "minhash":
-        return d_minhash.minhash_buckets(signatures)
-    if detector == "simhash":
-        return d_simhash.simhash_buckets(signatures, cfg.simhash)
-    if detector == "suffix":
-        return d_suffix.suffix_buckets(signatures)
-    raise ValueError(detector)
-
-
 def _verify_is_noop(detector: str, cfg: JobConfig) -> bool:
-    """True when _verify returns its input unchanged — the ONE source
-    of truth for both _verify's early return and compute_edges'
-    decode/encode-sandwich skip (and the edges stage's key params)."""
+    """True when the edges stage keeps its candidates unverified (the
+    exact detector with ParanoidMode off) — the ONE source of truth for
+    compute_edges' verify and decode/encode-sandwich skip and for the
+    edges stage's key params."""
     return detector == "exact" and not cfg.paranoid
-
-
-def _verify(
-    pairs: DataFrame,
-    images: DataFrame,
-    signatures: DataFrame,
-    detector: str,
-    cfg: JobConfig,
-) -> DataFrame:
-    """ParanoidMode analogue per detector (hashing.go:135-239); for the
-    fuzzy detectors verification is NOT optional — it is what turns
-    candidate buckets into true near-dup pairs."""
-    if detector == "exact":
-        if _verify_is_noop(detector, cfg):
-            return pairs
-        return verify_exact(pairs, images)
-    if detector == "minhash":
-        mh = cfg.minhash
-        if mh.verify_prefilter:
-            # sketch-estimate cut kills the LSH false-positive bulk
-            # JVM-side before captions are attached (verify.py docs)
-            pairs = prefilter_minhash(
-                pairs, signatures, mh.jaccard_threshold,
-                mh.num_hashes, mh.prefilter_margin_sigmas,
-            )
-        return verify_jaccard(
-            pairs, images, mh.shingle_k, mh.jaccard_threshold
-        ).select("a", "b")
-    if detector == "simhash":
-        return d_simhash.simhash_pairs_verified(pairs, signatures, cfg.simhash)
-    if detector == "suffix":
-        return d_suffix.verify_substring(pairs, images, cfg.suffix).select("a", "b")
-    raise ValueError(detector)
 
 
 def _incremental_signatures(
@@ -208,8 +133,12 @@ def _incremental_signatures(
     (hashing.go:84-88) as one anti join; unchanged rows keep their
     cached signature without re-running the signature UDF.
     """
-    fp = images.withColumn("row_fp", _row_fp(detector))
-    full = _signatures(images, detector, cfg).join(
+    det, dcfg = DETECTORS[detector], getattr(cfg, detector, None)
+    # the row fingerprint hashes exactly the columns the detector's
+    # chain reads (the (size, mtime) stat proxy of hashing.go:73-88:
+    # our schema has no mtime, so content columns are hashed directly)
+    fp = images.withColumn("row_fp", F.xxhash64(*det.reads(dcfg)))
+    full = det.signatures(images, dcfg).join(
         fp.select("image_id", "row_fp"), "image_id"
     )
     try:
@@ -241,7 +170,7 @@ def _incremental_signatures(
         cached.select("image_id", "row_fp"), ["image_id", "row_fp"], "left_anti"
     ).select("image_id")
     fresh_rows = images.join(stale_ids, "image_id")
-    fresh = _signatures(fresh_rows, detector, cfg).join(
+    fresh = det.signatures(fresh_rows, dcfg).join(
         fp.select("image_id", "row_fp"), "image_id"
     )
     return unchanged.unionByName(fresh)
@@ -289,8 +218,12 @@ def run_pipeline(
     if images is None:
         images = load_images(spark, cfg)
 
-    # early-exit guard: abort on an empty input (runner.go:255-260)
-    if images.limit(1).count() == 0:
+    # one BOUNDED input probe (limit n, never a full count — same cost
+    # at 10^12 rows) decides both the early exit on an empty input
+    # (runner.go:255-260) and the id-encoding plan below
+    probe = ID_ENCODING_MIN_ROWS
+    n_probe = images.select("image_id").limit(probe).count()
+    if n_probe == 0:
         empty_assign = spark.createDataFrame([], "image_id string, cluster_id string")
         empty_rep = spark.createDataFrame(
             [], "image_id string, caption string, dup_image_id string, "
@@ -308,12 +241,10 @@ def run_pipeline(
     # and CC round downstream is keyed by 8-byte longs instead of id
     # strings — ~3× narrower rows on the pipeline's widest shuffles.
     # Built BEFORE the concurrent detector chains (they all read it).
-    # The decision is sized with a BOUNDED probe (limit n, never a full
-    # count — same cost at 10^12 rows): below ID_ENCODING_MIN_ROWS the
-    # mapping joins cost more than narrow shuffles save, so small
-    # inputs keep the direct string-keyed plan.
-    probe = ID_ENCODING_MIN_ROWS
-    use_iid = images.select("image_id").limit(probe).count() >= probe
+    # Below ID_ENCODING_MIN_ROWS (the probe above) the mapping joins
+    # cost more than narrow shuffles save, so small inputs keep the
+    # direct string-keyed plan.
+    use_iid = n_probe >= probe
     # stages keyed by long iids (candidates, edges, components) carry
     # use_iid in their params and the ids stage upstream, so a
     # string-keyed checkpoint never resumes into the long-keyed plan
@@ -342,18 +273,19 @@ def run_pipeline(
         )
         sig_stage = f"signatures_{det}"
         cand_stage = f"candidates_{det}"
+        chain, dcfg = DETECTORS[det], getattr(cfg, det, None)
 
         def compute_sigs():
             if cfg.use_cache:
                 return _incremental_signatures(
                     spark, images, det, cfg, st.store, sig_stage
                 )
-            return _signatures(images, det, cfg).withColumn(
+            return chain.signatures(images, dcfg).withColumn(
                 "row_fp", F.lit(None).cast("long")
             )
 
         sigs = st.run(
-            sig_stage, compute_sigs, params=cfg.config_id(det), detector=det
+            sig_stage, compute_sigs, params=config_id(det, dcfg), detector=det
         )
 
         def compute_pairs():
@@ -362,7 +294,7 @@ def run_pipeline(
             # pipeline — it must carry longs, not id strings
             sigs_enc = _enc(sigs, ("image_id",))
             pairs, overcap = pairs_from_buckets(
-                _buckets(sigs_enc, det, cfg), cfg.bucket_cap
+                chain.buckets(sigs_enc, dcfg), cfg.bucket_cap
             )
             # durable record of capped buckets — never silently
             # truncated (SURVEY §2.2).  The overcap aggregate is its
@@ -390,7 +322,7 @@ def run_pipeline(
             # encoding a payload projection would (bytes must never
             # shuffle at table width — SURVEY §7 hard-part (e))
             pairs_str = _dec(pairs, ("a", "b"))
-            verified = _verify(pairs_str, images, sigs, det, cfg)
+            verified = chain.verify(pairs_str, images, sigs, dcfg)
             return _enc(verified.select("a", "b"), ("a", "b"))
 
         # paranoid keys ONLY the edges stage: signatures and candidates

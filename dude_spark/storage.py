@@ -51,9 +51,10 @@ class StageStore(abc.ABC):
     """Durable store for named pipeline stages + their manifests."""
 
     @abc.abstractmethod
-    def write(self, df: DataFrame, stage: str) -> DataFrame:
-        """Materialize `df` as stage `stage` (overwrite) and return a
-        re-read DataFrame (so no lineage chain spans a stage)."""
+    def write(self, df: DataFrame, stage: str) -> None:
+        """Materialize `df` as stage `stage` (overwrite).  Callers that
+        consume the stage ``read`` it back, so no lineage chain spans a
+        stage."""
 
     @abc.abstractmethod
     def read(self, stage: str) -> DataFrame:
@@ -95,9 +96,8 @@ class ParquetManifestStore(StageStore):
     def _manifest_path(self, stage: str) -> str:
         return self.path(stage) + ".manifest.json"
 
-    def write(self, df: DataFrame, stage: str) -> DataFrame:
+    def write(self, df: DataFrame, stage: str) -> None:
         df.write.mode("overwrite").parquet(self.path(stage))
-        return self.spark.read.parquet(self.path(stage))
 
     def read(self, stage: str) -> DataFrame:
         return self.spark.read.parquet(self.path(stage))
@@ -275,7 +275,8 @@ class StageRunner:
                 return self.store.read(stage)
         t0 = time.monotonic()
         self.store.clear_manifest(stage)
-        out = self.store.write(compute(), stage)
+        self.store.write(compute(), stage)
+        out = self.store.read(stage)
         pc = partition_count_rows(out)  # one cheap count-per-partition job
         rows = sum(n for _, n in pc)
         wall = time.monotonic() - t0
@@ -349,8 +350,19 @@ def _hadoop_rename(spark: SparkSession, src: str, dst: str) -> None:
 
 
 def _hadoop_write_text(spark: SparkSession, path: str, text: str) -> None:
-    """Create-and-write a small text file through the Hadoop FS."""
+    """Create-and-write a small text file through the Hadoop FS.
+
+    On a checksummed filesystem (Hadoop's local one) the file is
+    written through the raw filesystem, without a ``.crc`` sidecar: a
+    meta that a local tool rewrites later (``streaming.migrate``) must
+    not read back as corrupt.  Deletes and renames still go through
+    the checksummed filesystem, so they drop a legacy sidecar too."""
     fs, p = _hadoop_fs(spark, path)
+    checksummed = spark._jvm.java.lang.Class.forName(
+        "org.apache.hadoop.fs.ChecksumFileSystem"
+    )
+    if checksummed.isInstance(fs):
+        fs = fs.getRawFileSystem()
     out = fs.create(p, True)
     try:
         out.write(bytearray(text.encode("utf-8")))
@@ -898,9 +910,8 @@ class IcebergStageStore(StageStore):
     def _table(self, stage: str) -> str:
         return f"{self.catalog}.{self.namespace}.{stage}"
 
-    def write(self, df: DataFrame, stage: str) -> DataFrame:
+    def write(self, df: DataFrame, stage: str) -> None:
         df.writeTo(self._table(stage)).using("iceberg").createOrReplace()
-        return self.spark.table(self._table(stage))
 
     def read(self, stage: str) -> DataFrame:
         return self.spark.table(self._table(stage))

@@ -4,11 +4,9 @@ from .components import (  # noqa: F401
     update_assignments,
 )
 from .ingest import (  # noqa: F401
+    detector_ingest,
     embedding_ingest,
-    minhash_ingest,
-    simhash_ingest,
     start_incremental_dedup,
-    suffix_ingest,
     tilephash_hamming_ingest,
     tilephash_ingest,
 )

@@ -21,8 +21,8 @@ signature index it is not.)
 
 Detector parameterization (round-2 VERDICT next #5): ``bucket_fn``
 maps the batch to ``(image_id, bucket)`` — exact sha2 buckets by
-default, or any fuzzy detector's signature→bucket chain (see
-``minhash_ingest`` for the D1 preset).  Fuzzy buckets are candidates,
+default, or any registry detector's signature→bucket chain (see
+``detector_ingest`` for D0-D3).  Fuzzy buckets are candidates,
 not verdicts, so ``verify_fn`` re-checks candidate pairs exactly
 against the row payloads; the columns verification needs
 (``state_cols``, captions by default) are persisted per epoch so
@@ -62,23 +62,16 @@ from collections.abc import Callable, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..config import MinHashConfig, SimHashConfig, SuffixConfig
-from ..detectors.exact import exact_buckets
-from ..detectors.minhash import minhash_buckets, minhash_signatures
-from ..detectors.simhash import (
-    simhash_buckets,
-    simhash_pairs_verified,
-    simhash_signatures,
-)
-from ..detectors.suffix import (
-    suffix_buckets,
-    suffix_signatures,
-    verify_substring,
-)
+from ..detectors import DETECTORS, exact_buckets
 from ..operators.candidates import cross_corpus_pairs
-from ..operators.verify import verify_jaccard
 from ..session import pin
-from ..storage import ShardedEpochStore
+from ..storage import (
+    ShardedEpochStore,
+    _hadoop_exists,
+    _hadoop_read_text,
+    _hadoop_write_text,
+    _hadoop_write_text_atomic,
+)
 
 BucketFn = Callable[[DataFrame], DataFrame]
 VerifyFn = Callable[[DataFrame, DataFrame], DataFrame]
@@ -134,26 +127,56 @@ def _batch_pairs(
     return pairs, overcap, scan
 
 
-def minhash_ingest(
-    cfg: MinHashConfig | None = None,
-) -> tuple[BucketFn, VerifyFn, tuple[str, ...]]:
-    """D1 preset for start_incremental_dedup: near-dup-at-ingest.
+def _pair_members(pairs: DataFrame, rows: DataFrame) -> DataFrame:
+    """The rows whose image_id appears in a candidate pair — the
+    semi-reduction idiom of operators/verify._attach, so a verify's
+    per-row work is O(|pairs|), never O(corpus)."""
+    keys = (
+        pairs.select(F.col("a").alias("image_id"))
+        .unionByName(pairs.select(F.col("b").alias("image_id")))
+        .distinct()
+    )
+    return rows.join(keys, "image_id", "leftsemi")
 
-    Returns ``(bucket_fn, verify_fn, state_cols)`` — MinHash-LSH band
-    buckets for candidate generation and the exact-Jaccard recheck
-    (the batch pipeline's own verify stage) over captions persisted in
-    the per-epoch rows state."""
-    cfg = cfg or MinHashConfig()
+
+def detector_ingest(
+    name: str, cfg
+) -> tuple[BucketFn, VerifyFn | None, tuple[str, ...]]:
+    """Registry-detector preset for start_incremental_dedup: the
+    ``detectors.DETECTORS[name]`` chain at ingest, for any of D0-D3
+    (exact, minhash, simhash, suffix) under its sub-config ``cfg``.
+
+    Returns ``(bucket_fn, verify_fn, state_cols)``.  ``bucket_fn`` is
+    the detector's signature → bucket chain over the batch; its
+    buckets are candidates, so ``verify_fn`` is the detector's exact
+    recheck over the rows state.  ``state_cols`` is what the chain
+    reads (``Detector.reads``): raw payload columns, not signatures,
+    keep the rows state detector-agnostic, and verify recomputes
+    signatures only for the semi-reduced pair members — the signature
+    cost is O(|pairs|), not O(corpus) — so the MinHash prefilter runs
+    at ingest exactly as in the batch pipeline.  Exact has no verify
+    and keeps no rows state: its sha2-256 content bucket is the match
+    contract, and bytes never belong in the state.
+    """
+    det = DETECTORS[name]
+    state_cols = det.reads(cfg)
+    if not state_cols:
+        raise ValueError(f"{name} config reads no columns: {cfg}")
 
     def bucket_fn(batch: DataFrame) -> DataFrame:
-        return minhash_buckets(minhash_signatures(batch, cfg))
+        return det.buckets(det.signatures(batch, cfg), cfg)
+
+    if name == "exact":
+        return bucket_fn, None, ()
 
     def verify_fn(pairs: DataFrame, rows: DataFrame) -> DataFrame:
-        return verify_jaccard(
-            pairs, rows, cfg.shingle_k, cfg.jaccard_threshold
-        ).select("a", "b")
+        # distinct: a re-crawled row sits in both the batch and the
+        # state, and a second copy of its signature would multiply its
+        # pairs through the MinHash prefilter
+        members = _pair_members(pairs, rows).distinct()
+        return det.verify(pairs, rows, det.signatures(members, cfg), cfg)
 
-    return bucket_fn, verify_fn, ("caption",)
+    return bucket_fn, verify_fn, state_cols
 
 
 def embedding_ingest(
@@ -179,7 +202,7 @@ def embedding_ingest(
     closed-form expression the batch operators and their DuckDB
     oracles use, so batch and stream can never disagree on what
     "semantic duplicate" means.  State persists the raw ``embedding``
-    column (detector-agnostic rows state, the simhash_ingest
+    column (detector-agnostic rows state, the detector_ingest
     convention): verify cost is O(|pairs|), never O(corpus).
     """
     import numpy as np
@@ -210,14 +233,9 @@ def embedding_ingest(
         )
 
     def verify_fn(pairs: DataFrame, rows: DataFrame) -> DataFrame:
-        keys = (
-            pairs.select(F.col("a").alias("image_id"))
-            .unionByName(pairs.select(F.col("b").alias("image_id")))
-            .distinct()
-        )
-        members = rows.join(keys, "image_id", "leftsemi")
         u = _u_frame(
-            members.select("image_id", "embedding"), "image_id", "embedding"
+            _pair_members(pairs, rows).select("image_id", "embedding"),
+            "image_id", "embedding",
         )
         return verify_pairs_cosine(pairs, u, threshold_x1000)
 
@@ -335,82 +353,6 @@ def tilephash_hamming_ingest(
     return bucket_fn, verify_fn, ("tile_keys",), rows_fn
 
 
-def simhash_ingest(
-    cfg: SimHashConfig | None = None,
-) -> tuple[BucketFn, VerifyFn, tuple[str, ...]]:
-    """D2 preset for start_incremental_dedup — caption and/or phash
-    channels, following the config exactly like the batch detector.
-
-    Returns ``(bucket_fn, verify_fn, state_cols)`` — pigeonhole
-    Hamming-ball buckets for candidate generation and the exact
-    per-channel Hamming recheck.  ``state_cols`` carries exactly the
-    raw columns the enabled channels need (``caption`` and/or
-    ``phash``): persisting raw features (not sigs) in the rows state
-    keeps the state schema detector-agnostic — the verify recomputes
-    signatures for just the semi-reduced pair members (the signature
-    cost is O(|pairs|), not O(corpus); the phash channel's "signature"
-    is the raw column itself, a pure projection).
-
-    The phash channel at ingest is the multimodal half of the brief:
-    visually-identical re-encodes (same perceptual hash within the
-    Hamming ball) pair against KNOWN images as they stream in, the
-    generalization of the reference's content-equality at ingest
-    (/root/reference/internal/processing/hashing.go:289-319) to
-    near-identical pixels.  Default: caption-only (a bytes-less text
-    stream needs no phash column).
-    """
-    cfg = cfg or SimHashConfig(use_phash=False)
-    state_cols = tuple(
-        c
-        for c, on in (("caption", cfg.use_caption), ("phash", cfg.use_phash))
-        if on
-    )
-    if not state_cols:
-        raise ValueError("SimHashConfig enables no channels")
-
-    def bucket_fn(batch: DataFrame) -> DataFrame:
-        return simhash_buckets(simhash_signatures(batch, cfg), cfg)
-
-    def verify_fn(pairs: DataFrame, rows: DataFrame) -> DataFrame:
-        # signatures only for rows that appear in a candidate pair —
-        # the same semi-reduction idiom as operators/verify._attach
-        keys = (
-            pairs.select(F.col("a").alias("image_id"))
-            .unionByName(pairs.select(F.col("b").alias("image_id")))
-            .distinct()
-        )
-        members = rows.join(keys, "image_id", "leftsemi")
-        sigs = simhash_signatures(members, cfg)
-        return simhash_pairs_verified(pairs, sigs, cfg).select("a", "b")
-
-    return bucket_fn, verify_fn, state_cols
-
-
-def suffix_ingest(
-    cfg: SuffixConfig | None = None,
-) -> tuple[BucketFn, VerifyFn, tuple[str, ...]]:
-    """D3 preset for start_incremental_dedup: substring-overlap at
-    ingest (the decontamination predicate applied stream-side).
-
-    Returns ``(bucket_fn, verify_fn, state_cols)`` — winnowed
-    fingerprints as bucket keys (the winnowing guarantee makes a
-    shared >= min_match_len substring imply a shared fingerprint, so
-    candidate recall is exact) and the exact shared-L-gram recheck
-    over captions persisted in the rows state.  Completes detector
-    symmetry at ingest: D0 exact, D1 minhash, D2 simhash, D3 suffix
-    all run through the same foreachBatch state machinery.
-    """
-    cfg = cfg or SuffixConfig()
-
-    def bucket_fn(batch: DataFrame) -> DataFrame:
-        return suffix_buckets(suffix_signatures(batch, cfg))
-
-    def verify_fn(pairs: DataFrame, rows: DataFrame) -> DataFrame:
-        return verify_substring(pairs, rows, cfg).select("a", "b")
-
-    return bucket_fn, verify_fn, ("caption",)
-
-
 def start_incremental_dedup(
     spark: SparkSession,
     input_dir: str,
@@ -509,7 +451,7 @@ def start_incremental_dedup(
     never collide with new ones, so every cross-epoch pair silently
     vanishes (the n_state_shards failure class, detector-shaped).
     Pass a stable id naming the bucket/verify configuration (the CLI
-    derives one from detector + thresholds + state_cols) and a
+    passes ``detectors.config_id``) and a
     mismatched restart is refused; legacy state dirs adopt the pin on
     first pinned restart.
     """
@@ -541,12 +483,14 @@ def start_incremental_dedup(
     # signatures simply never collide with new ones and cross-epoch
     # pairs silently vanish.  bucket_fn is an opaque callable, so the
     # guard is opt-in: callers that can name their config (the CLI
-    # does, from detector + thresholds + state_cols) pass it and a
-    # mismatched restart is refused.
+    # passes detectors.config_id) pass it and a mismatched restart is
+    # refused.
+    # The meta, epoch markers and audits go through the Hadoop
+    # FileSystem API like the data, so state_dir may be a URI and the
+    # pins always sit on the state's own filesystem.
     meta_path = os.path.join(state_dir, "state_meta.json")
-    if os.path.exists(meta_path):
-        with open(meta_path) as f:
-            meta = json.load(f)
+    if _hadoop_exists(spark, meta_path):
+        meta = json.loads(_hadoop_read_text(spark, meta_path))
         if meta.get("n_state_shards") != n_state_shards:
             raise ValueError(
                 f"state dir {state_dir} was created with "
@@ -572,24 +516,19 @@ def start_incremental_dedup(
         if state_config_id is not None and pinned_cid is None:
             # legacy meta (pre-config-id): adopt the pin in place
             meta["config_id"] = state_config_id
-            with open(meta_path, "w") as f:
-                json.dump(meta, f)
-    elif os.path.exists(os.path.join(state_dir, "sigs")):
+            _hadoop_write_text_atomic(spark, meta_path, json.dumps(meta))
+    elif _hadoop_exists(spark, os.path.join(state_dir, "sigs")):
         raise ValueError(
             f"state dir {state_dir} holds pre-sharded signature state "
             "(no state_meta.json) — start a fresh state_dir + checkpoint"
         )
     else:
-        os.makedirs(state_dir, exist_ok=True)
-        with open(meta_path, "w") as f:
-            json.dump(
-                {
-                    "n_state_shards": n_state_shards,
-                    "config_id": state_config_id,
-                    "version": 2,
-                },
-                f,
-            )
+        meta = {
+            "n_state_shards": n_state_shards,
+            "config_id": state_config_id,
+            "version": 2,
+        }
+        _hadoop_write_text_atomic(spark, meta_path, json.dumps(meta))
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         # Replay idempotency WITHOUT transactions: every epoch writes
@@ -601,7 +540,7 @@ def start_incremental_dedup(
         # The marker only short-circuits fully-committed epochs (with
         # Iceberg this is one atomic multi-table commit instead).
         marker = os.path.join(epochs_path, f"epoch_{batch_id}")
-        if os.path.exists(marker):
+        if _hadoop_exists(spark, marker):
             return
         if prefilter_fn is not None:
             batch_df, rejected = prefilter_fn(batch_df)
@@ -671,23 +610,18 @@ def start_incremental_dedup(
             )
         # durable prune audit: the evidence each epoch's state read was
         # O(batch-touched shards), not O(corpus)
-        os.makedirs(scans_path, exist_ok=True)
-        with open(
-            os.path.join(scans_path, f"epoch_{batch_id}.json"), "w"
-        ) as f:
-            json.dump(
-                {
-                    "epoch": batch_id,
-                    "n_state_shards": n_state_shards,
-                    "sigs": sig_scan,
-                    "rows": rows_scan,
-                    "assign": assign_audit,
-                },
-                f,
-            )
-        os.makedirs(epochs_path, exist_ok=True)
-        with open(marker, "w") as f:
-            f.write("done")
+        scan = {
+            "epoch": batch_id,
+            "n_state_shards": n_state_shards,
+            "sigs": sig_scan,
+            "rows": rows_scan,
+            "assign": assign_audit,
+        }
+        _hadoop_write_text(
+            spark, os.path.join(scans_path, f"epoch_{batch_id}.json"),
+            json.dumps(scan),
+        )
+        _hadoop_write_text(spark, marker, "done")
         # maintenance AFTER the commit marker: a replay of this epoch
         # short-circuits above, so a crash anywhere in compact() can
         # never merge an uncommitted epoch; the next eligible epoch's
@@ -705,12 +639,11 @@ def start_incremental_dedup(
                 audit["members"] = members_store.compact(
                     batch_id, dedup="distinct"
                 )
-            compactions_path = os.path.join(state_dir, "compactions")
-            os.makedirs(compactions_path, exist_ok=True)
-            with open(
-                os.path.join(compactions_path, f"epoch_{batch_id}.json"), "w"
-            ) as f:
-                json.dump(audit, f)
+            _hadoop_write_text(
+                spark,
+                os.path.join(state_dir, "compactions", f"epoch_{batch_id}.json"),
+                json.dumps(audit),
+            )
 
     stream = spark.readStream.schema(schema).parquet(input_dir)
     writer = (

@@ -31,6 +31,36 @@ def test_cli_stream_exact(spark, tmp_path, monkeypatch, capsys):
     assert pairs == {("a", "b")}
 
 
+def test_cli_stream_schema_type_mismatch_is_refused(spark, tmp_path, monkeypatch):
+    """A --schema column typed unlike the parquet files already in
+    --input (w int over INT64) is refused with a ConfigError naming the
+    column and both types, before the stream starts; matching types and
+    columns the files lack pass the check."""
+    import pandas as pd
+    import pytest
+
+    from dude_spark.config import ConfigError
+
+    input_dir, state_dir = tmp_path / "in", str(tmp_path / "state")
+    input_dir.mkdir()
+    pd.DataFrame({"image_id": ["a", "b"], "w": [1, 2]}).to_parquet(
+        input_dir / "part-0.parquet"
+    )
+    monkeypatch.setattr(cli, "get_spark", lambda *a, **k: spark)
+    monkeypatch.setattr(spark, "stop", lambda: None)
+
+    with pytest.raises(ConfigError, match="'w' as int.* hold bigint"):
+        cli.main([
+            "stream", "--input", str(input_dir), "--state", state_dir,
+            "--schema", "image_id string, w int",
+        ])
+    assert not os.path.exists(state_dir)
+    assert cli.main([
+        "stream", "--input", str(input_dir), "--state", state_dir,
+        "--schema", "image_id string, bytes binary, w bigint",
+    ]) == 0
+
+
 def test_cli_stream_minhash_flag_builds_detector(spark, tmp_path, monkeypatch):
     """--detector minhash wires the D1 preset (near-dup captions pair)."""
     input_dir, state_dir = str(tmp_path / "in"), str(tmp_path / "state")

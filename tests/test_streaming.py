@@ -6,7 +6,8 @@ import os
 
 import pytest
 
-from dude_spark.streaming import minhash_ingest, start_incremental_dedup
+from dude_spark.config import MinHashConfig
+from dude_spark.streaming import detector_ingest, start_incremental_dedup
 
 
 def _write_batch(spark, input_dir: str, rows: list[tuple[str, bytes]]):
@@ -67,6 +68,49 @@ def test_incremental_dedup_stream(spark, tmp_path):
         if d.startswith("epoch=")
     }
     assert pair_dirs == {"epoch=0", "epoch=1"}
+
+
+def test_uri_state_dir_keeps_meta_and_markers_with_the_state(
+    spark, tmp_path, monkeypatch
+):
+    """A ``file://`` state dir holds the meta, the epoch markers and the
+    scan audits next to the data: a restart from another working
+    directory still sees the n_state_shards pin, and nothing lands in
+    a ``file:`` directory under the working directory."""
+    import json
+
+    input_dir = str(tmp_path / "in")
+    local = tmp_path / "state"
+    state_dir = local.as_uri()
+    cwd1, cwd2 = tmp_path / "cwd1", tmp_path / "cwd2"
+    cwd1.mkdir()
+    cwd2.mkdir()
+    schema = "image_id string, bytes binary"
+
+    monkeypatch.chdir(cwd1)
+    _write_batch(spark, input_dir, [("a", b"x"), ("b", b"x")])
+    _drain(spark, input_dir, state_dir, schema)
+    _write_batch(spark, input_dir, [("c", b"x"), ("d", b"y")])
+    _drain(spark, input_dir, state_dir, schema)
+    pairs = {
+        (r["a"], r["b"])
+        for r in spark.read.parquet(state_dir + "/pairs").collect()
+    }
+    assert pairs == {("a", "b"), ("a", "c"), ("b", "c")}
+    assert sorted(os.listdir(local / "epochs")) == ["epoch_0", "epoch_1"]
+    assert sorted(os.listdir(local / "scans")) == [
+        "epoch_0.json", "epoch_1.json"
+    ]
+    meta = json.loads((local / "state_meta.json").read_text())
+    assert meta["n_state_shards"] == 64
+
+    monkeypatch.chdir(cwd2)
+    with pytest.raises(ValueError, match="n_state_shards=64"):
+        start_incremental_dedup(
+            spark, input_dir, state_dir, schema, n_state_shards=8
+        )
+    for cwd in (cwd1, cwd2):
+        assert [p for p in os.listdir(cwd) if p.startswith("file:")] == []
 
 
 def test_stream_state_read_is_pruned(spark, tmp_path):
@@ -166,7 +210,9 @@ def test_incremental_dedup_stream_minhash(spark, tmp_path):
     exact-Jaccard verified, and a restart re-emits nothing."""
     input_dir, state_dir = str(tmp_path / "in"), str(tmp_path / "state")
     schema = "image_id string, caption string"
-    bucket_fn, verify_fn, state_cols = minhash_ingest()
+    bucket_fn, verify_fn, state_cols = detector_ingest(
+        "minhash", MinHashConfig()
+    )
 
     def write(rows):
         df = spark.createDataFrame(rows, schema)
@@ -262,11 +308,13 @@ def test_incremental_dedup_stream_simhash(spark, tmp_path):
     — the exact detector would miss it) pairs with its source both
     within a batch and cross-epoch against known state, and the
     Hamming verify recomputes signatures only for pair members."""
-    from dude_spark.streaming import simhash_ingest
+    from dude_spark.config import SimHashConfig
 
     input_dir, state_dir = str(tmp_path / "in"), str(tmp_path / "state")
     schema = "image_id string, caption string"
-    bucket_fn, verify_fn, state_cols = simhash_ingest()
+    bucket_fn, verify_fn, state_cols = detector_ingest(
+        "simhash", SimHashConfig(use_phash=False)
+    )
 
     def write(rows):
         df = spark.createDataFrame(rows, schema)
@@ -307,12 +355,11 @@ def test_incremental_dedup_stream_simhash_phash(spark, tmp_path):
     DISTINCT 8-bit segments, so pigeonhole recovery is deterministic
     (the WWW'07 guarantee), and a restart re-emits nothing."""
     from dude_spark.config import SimHashConfig
-    from dude_spark.streaming import simhash_ingest
 
     input_dir, state_dir = str(tmp_path / "in"), str(tmp_path / "state")
     schema = "image_id string, phash long"
-    bucket_fn, verify_fn, state_cols = simhash_ingest(
-        SimHashConfig(use_caption=False)
+    bucket_fn, verify_fn, state_cols = detector_ingest(
+        "simhash", SimHashConfig(use_caption=False)
     )
     assert state_cols == ("phash",)
 
@@ -355,10 +402,11 @@ def test_incremental_dedup_stream_simhash_phash(spark, tmp_path):
 
 def test_simhash_ingest_rejects_no_channels():
     from dude_spark.config import SimHashConfig
-    from dude_spark.streaming import simhash_ingest
 
     with pytest.raises(ValueError):
-        simhash_ingest(SimHashConfig(use_phash=False, use_caption=False))
+        detector_ingest(
+            "simhash", SimHashConfig(use_phash=False, use_caption=False)
+        )
 
 
 def test_incremental_dedup_stream_suffix(spark, tmp_path):
@@ -367,11 +415,13 @@ def test_incremental_dedup_stream_suffix(spark, tmp_path):
     text — minhash-blind at low Jaccard, exact-detector-blind because
     byte-unequal) pair within a batch and cross-epoch against known
     state; the shared-L-gram verify runs only on pair members."""
-    from dude_spark.streaming import suffix_ingest
+    from dude_spark.config import SuffixConfig
 
     input_dir, state_dir = str(tmp_path / "in"), str(tmp_path / "state")
     schema = "image_id string, caption string"
-    bucket_fn, verify_fn, state_cols = suffix_ingest()
+    bucket_fn, verify_fn, state_cols = detector_ingest(
+        "suffix", SuffixConfig()
+    )
 
     def write(rows):
         df = spark.createDataFrame(rows, schema)
