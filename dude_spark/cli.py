@@ -1515,7 +1515,9 @@ def _cmd_dedup_new(a: argparse.Namespace) -> int:
             kb, nb, a.bucket_cap, a.overcap_mode
         )
         if verify_fn is not None and not a.no_verify:
-            pairs = verify_fn(pairs, known.unionByName(new))
+            # distinct: a re-crawled id has a payload row on both
+            # sides, and the verify attach joins every copy
+            pairs = verify_fn(pairs, known.unionByName(new)).distinct()
         n = _written(pairs, f"{a.out}/pairs").count()
         n_cap = _written(overcap, f"{a.out}/overcap").count()
         print(f"{n} duplicate pairs (new batch vs corpus + "

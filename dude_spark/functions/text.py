@@ -1,10 +1,24 @@
 """Text-analysis column functions: tokens, quality, language, fingerprint.
 
-Pure JVM-side ``pyspark.sql.functions`` expressions — each stays inside
-whole-stage codegen, so they run at scan speed over 100 TB (no Python
-worker hop).  Every function has an ANSI-SQL twin in
+Pure JVM-side ``pyspark.sql.functions`` expressions — no Python worker
+hop, so they run over 100 TB at JVM speed.  The token-array signals
+use higher-order functions (``filter``/``transform``/``aggregate``),
+which Spark evaluates interpreted: a plan holding them runs outside
+whole-stage codegen.  Every function has an ANSI-SQL twin in
 ``__spark_entry__.oracle_sql`` (DuckDB) — outputs are integers/strings
 only, never floats, so cross-engine value hashing is exact.
+
+Tokens are bound once per row.  Spark re-evaluates an expression each
+time it is referenced, and an expression captured inside a lambda once
+per array element — ``element_at(tokens(text), i)`` inside a
+``transform`` re-splits the document for every element of every gram,
+quadratic in document length.  Projecting the tokens as a column does
+not help: filter pushdown inlines the projection back into every
+reference.  So every signal that reads the token array more than once
+binds it with ``_let``, to a lambda variable inside the expression
+itself, and callers that need several signals (``quality_signals``,
+``repetition_signals``, ``operators.filters.rejection_reason``) bind
+it once for all of them.
 
 Design notes per function:
   token_count      whitespace tokenization; empty/blank text counts 0.
@@ -12,7 +26,8 @@ Design notes per function:
                    semantics in Java regex and RE2 (POSIX classes like
                    [[:punct:]] differ between engines; avoided).
   stopword_count   higher-order filter over the token array (JVM
-                   lambda, not a UDF).
+                   lambda, not a UDF); matches every ASCII case form
+                   of STOPWORDS instead of lowercasing each token.
   lang_id          deterministic cascade: CJK / Greek / Cyrillic
                    script ranges, then padded-stopword votes for
                    de/fr/es, else 'en'.  Precedence order is part of
@@ -27,15 +42,40 @@ Design notes per function:
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from itertools import product
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 STOPWORDS = ("a", "the", "and", "of", "to", "in")
 
+# Every ASCII case form of STOPWORDS ("the" → "the", "thE", ... "THE").
+# ``t.isin(*_STOPWORD_FORMS)`` equals ``lower(t).isin(*STOPWORDS)``: of
+# all non-ASCII code points, only two lowercase to anything holding an
+# ASCII letter — U+0130 'İ' to 'i' + U+0307 (two code points) and the
+# Kelvin sign U+212A to 'k' (in no stopword).  It skips the per-token
+# case mapping, whose first call in a JVM also pays ~2 s of ICU
+# initialisation.
+_STOPWORD_FORMS = tuple(
+    "".join(form)
+    for word in STOPWORDS
+    for form in product(*[(c.lower(), c.upper()) for c in word])
+)
+
 # script-range detection shared by both regex engines (Java + RE2)
 _CJK = "[\\x{4e00}-\\x{9fff}]"
 _GREEK = "[\\x{0370}-\\x{03ff}]"
 _CYRILLIC = "[\\x{0400}-\\x{04ff}]"
+
+
+def _let(value: Column, body: Callable[[Column], Column]) -> Column:
+    """``body(v)`` with ``v`` bound to ``value``, evaluated once per row.
+
+    Spark evaluates an expression at every reference — inside a lambda,
+    once per array element — but a lambda variable only once, so the
+    value rides through a one-element ``transform``."""
+    return F.element_at(F.transform(F.array(value), body), 1)
 
 
 def tokens(text: Column) -> Column:
@@ -54,11 +94,13 @@ def punct_count(text: Column) -> Column:
     return F.length(text) - F.length(F.regexp_replace(text, "[.,!?;:]", ""))
 
 
+def _stopword_count(toks: Column) -> Column:
+    return F.size(F.filter(toks, lambda t: t.isin(*_STOPWORD_FORMS)))
+
+
 def stopword_count(text: Column) -> Column:
-    """Tokens that are stopwords (lowercased match)."""
-    return F.size(
-        F.filter(tokens(text), lambda t: F.lower(t).isin(*STOPWORDS))
-    )
+    """Tokens that are stopwords (case-insensitive match)."""
+    return _stopword_count(tokens(text))
 
 
 # GPT-2-style pre-tokenizer pattern, simplified to the alternation-only
@@ -104,22 +146,13 @@ QUALITY_MIN_TOKENS = 20
 QUALITY_MIN_STOP_X1000 = 80
 
 
-def quality_signals(text: Column) -> list[tuple[str, Column]]:
-    """Integerized document-quality signals + class, Gopher-style:
-    ``n_tokens``, ``stop_x1000`` (stopword per-mille of tokens),
-    ``mwl_x10`` (mean word length ×10, chars/token incl. separators),
-    and ``quality`` ∈ {too_short, low_stopword, ok} — a first-match
-    cascade like lang_id, so precedence is part of the contract.
-
-    All arithmetic is integer floor-division on non-negative values, so
-    the DuckDB twin (``//``) hashes identically; everything is JVM
-    expressions inside whole-stage codegen (same contract as the rest
-    of this module)."""
-    n_tok = token_count(text)
+def _quality(toks: Column, text: Column) -> Column:
+    """quality_signals' struct over a bound token array."""
+    n_tok = F.size(toks)
     chars = F.length(text)
     zero = F.lit(0).cast("long")
     stop_x1000 = F.when(n_tok == 0, zero).otherwise(
-        F.floor(stopword_count(text) * 1000 / n_tok).cast("long")
+        F.floor(_stopword_count(toks) * 1000 / n_tok).cast("long")
     )
     mwl_x10 = F.when(n_tok == 0, zero).otherwise(
         F.floor(chars * 10 / n_tok).cast("long")
@@ -129,12 +162,28 @@ def quality_signals(text: Column) -> list[tuple[str, Column]]:
         .when(stop_x1000 < QUALITY_MIN_STOP_X1000, F.lit("low_stopword"))
         .otherwise(F.lit("ok"))
     )
-    return [
-        ("n_tokens", n_tok.cast("long")),
-        ("stop_x1000", stop_x1000),
-        ("mwl_x10", mwl_x10),
-        ("quality", quality),
-    ]
+    return F.struct(
+        n_tok.cast("long").alias("n_tokens"),
+        stop_x1000.alias("stop_x1000"),
+        mwl_x10.alias("mwl_x10"),
+        quality.alias("quality"),
+    )
+
+
+def quality_signals(text: Column) -> list[tuple[str, Column]]:
+    """Integerized document-quality signals + class, Gopher-style:
+    ``n_tokens``, ``stop_x1000`` (stopword per-mille of tokens),
+    ``mwl_x10`` (mean word length ×10, chars/token incl. separators),
+    and ``quality`` ∈ {too_short, low_stopword, ok} — a first-match
+    cascade like lang_id, so precedence is part of the contract.
+
+    All arithmetic is integer floor-division on non-negative values, so
+    the DuckDB twin (``//``) hashes identically.  Each signal is a
+    field of one struct built from the token array bound once
+    (``_let``)."""
+    q = _let(tokens(text), lambda toks: _quality(toks, text))
+    names = ("n_tokens", "stop_x1000", "mwl_x10", "quality")
+    return [(name, q[name]) for name in names]
 
 
 # repetition_signals thresholds (Gopher repetition filters, Rae et al.
@@ -151,9 +200,9 @@ def _gram_run_stats(grams: Column) -> Column:
     longer gram, which leaves the count*len product unambiguous — and
     the total characters inside grams occurring ≥ 2 times.
 
-    Runs entirely inside whole-stage codegen: ``array_sort`` groups
-    equal grams into adjacent runs, then one ``aggregate`` fold walks
-    the sorted array counting run lengths.  Zero shuffle, zero Python —
+    Runs row-local in the JVM: ``array_sort`` groups equal grams into
+    adjacent runs, then one ``aggregate`` fold walks the sorted array
+    counting run lengths.  Zero shuffle, zero Python —
     per-doc n-gram counting without the explode → groupBy(doc, gram)
     shuffle, which at 100 TB would move ~n× the corpus text through an
     exchange for a purely row-local statistic.
@@ -198,6 +247,38 @@ def _gram_run_stats(grams: Column) -> Column:
     )
 
 
+def _repetition(toks: Column, text: Column) -> Column:
+    """repetition_signals' struct over a bound token array; both folds
+    are bound too, as the struct reads each more than once."""
+    chars = F.length(text)
+    zero = F.lit(0).cast("long")
+    empty = F.coalesce(chars, F.lit(0)) == 0
+
+    def signals(top: Column, dup: Column) -> Column:
+        top_pm = F.when(empty, zero).otherwise(
+            F.floor(top["best_cnt"] * top["best_len"] * 1000 / chars).cast("long")
+        )
+        dup_pm = F.when(empty, zero).otherwise(
+            F.floor(dup["dup"] * 1000 / chars).cast("long")
+        )
+        flag = F.when(
+            (top_pm > REP_TOP2_MAX_X1000) | (dup_pm > REP_DUP5_MAX_X1000),
+            F.lit("repetitive"),
+        ).otherwise(F.lit("ok"))
+        return F.struct(
+            top_pm.alias("top2_x1000"),
+            dup_pm.alias("dup5_x1000"),
+            flag.alias("repetition"),
+        )
+
+    return _let(
+        _gram_run_stats(_ngrams(toks, 2)),
+        lambda top: _let(
+            _gram_run_stats(_ngrams(toks, 5)), lambda dup: signals(top, dup)
+        ),
+    )
+
+
 def repetition_signals(text: Column) -> list[tuple[str, Column]]:
     """Gopher-style repetition signals, integerized:
     ``top2_x1000`` — per-mille of characters covered by the most
@@ -215,41 +296,29 @@ def repetition_signals(text: Column) -> list[tuple[str, Column]]:
     expressions, and an exact ANSI-SQL twin (DuckDB groups by the true
     gram; the fold groups by adjacency after a sort — same multiset,
     same tie-break, no hashing involved, so equality is structural).
+    Both folds read one token array, bound once (``_let``).
     """
-    top = _gram_run_stats(word_ngrams(text, 2))
-    dup = _gram_run_stats(word_ngrams(text, 5))
-    chars = F.length(text)
-    zero = F.lit(0).cast("long")
-    top_pm = F.when(F.coalesce(chars, F.lit(0)) == 0, zero).otherwise(
-        F.floor(top["best_cnt"] * top["best_len"] * 1000 / chars).cast("long")
-    )
-    dup_pm = F.when(F.coalesce(chars, F.lit(0)) == 0, zero).otherwise(
-        F.floor(dup["dup"] * 1000 / chars).cast("long")
-    )
-    flag = F.when(
-        (top_pm > REP_TOP2_MAX_X1000) | (dup_pm > REP_DUP5_MAX_X1000),
-        F.lit("repetitive"),
-    ).otherwise(F.lit("ok"))
-    return [
-        ("top2_x1000", top_pm),
-        ("dup5_x1000", dup_pm),
-        ("repetition", flag),
-    ]
+    r = _let(tokens(text), lambda toks: _repetition(toks, text))
+    return [(name, r[name]) for name in ("top2_x1000", "dup5_x1000", "repetition")]
+
+
+def _ngrams(toks: Column, n: int) -> Column:
+    """word_ngrams over a bound token array."""
+    size = F.size(toks)
+    return F.when(
+        size >= n,
+        F.transform(
+            F.sequence(F.lit(0), size - n),
+            lambda i: F.array_join(F.slice(toks, i + 1, n), " "),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
 
 
 def word_ngrams(text: Column, n: int = 3) -> Column:
     """Array of space-joined word n-grams (< n tokens → empty array).
 
-    Built from sequence+transform+element_at — all JVM higher-order
-    functions, no UDF, so the downstream explode/groupBy dedup shuffle
-    sees codegen'd input.
+    Built from sequence+transform+slice — all JVM higher-order
+    functions, no UDF.  The token array is bound once (``_let``): the
+    gram lambda reads a lambda variable, not a re-split document.
     """
-    toks = tokens(text)
-    size = F.size(toks)
-    gram_at = lambda i: F.concat_ws(
-        " ", *[F.element_at(toks, i + F.lit(j)) for j in range(1, n + 1)]
-    )
-    return F.when(
-        size >= n,
-        F.transform(F.sequence(F.lit(0), size - n), gram_at),
-    ).otherwise(F.array().cast("array<string>"))
+    return _let(tokens(text), lambda toks: _ngrams(toks, n))

@@ -19,11 +19,17 @@ reason counts are a partition of the rejected set.
 
 Scale shape: every signal is a pure JVM Column expression
 (functions/text.py — quality, repetition fold, language cascade), so
-both outputs are plain codegen'd filters over the scan with ZERO
-shuffle and zero Python.  Writing both outputs re-evaluates the scan
-twice; at 10^12 rows that is two cheap map-only passes (or persist the
-tagged frame once if the storage tier makes scans expensive — the
-operator takes no position, it just never shuffles).
+both outputs are map-only filters over the scan with ZERO shuffle and
+zero Python.  The condition holds higher-order functions, so its
+Filter runs interpreted, outside whole-stage codegen; the cascade
+binds the document's token array once (``functions.text._let``) and
+every signal reads that binding, so a document is split once per
+evaluation.  The binding lives inside the expression because filter
+pushdown inlines a projected token column back into each reference.
+Writing both outputs re-evaluates the scan twice; at 10^12 rows that
+is two map-only passes (or persist the tagged frame once if the
+storage tier makes scans expensive — the operator takes no position,
+it just never shuffles).
 
 Reference analogue: none in DuDe (files are never content-filtered);
 thresholds follow the Gopher data-quality cuts (Rae et al. 2021
@@ -37,7 +43,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import lang_id, quality_signals, repetition_signals
+from ..functions.text import _let, _quality, _repetition, lang_id, tokens
 
 
 def rejection_reason(
@@ -49,24 +55,30 @@ def rejection_reason(
     every signal evaluates to NULL and the cascade would fall through
     to clean — the one document that must never reach the training
     corpus silently would.
+
+    The whole cascade reads one token array, bound once per row.
     """
-    quality = dict(quality_signals(text))["quality"]
-    repetition = dict(repetition_signals(text))["repetition"]
-    reason = (
-        F.when(text.isNull(), F.lit("too_short"))
-        .when(quality != "ok", quality)
-        .when(repetition == "repetitive", F.lit("repetitive"))
-    )
-    if allowed_langs is not None:
-        if not allowed_langs:
-            raise ValueError(
-                "allowed_langs must be None (no language cut) or name "
-                "at least one language"
-            )
-        reason = reason.when(
-            ~lang_id(text).isin(*allowed_langs), F.lit("lang_blocked")
+    if allowed_langs is not None and not allowed_langs:
+        raise ValueError(
+            "allowed_langs must be None (no language cut) or name "
+            "at least one language"
         )
-    return reason.otherwise(F.lit(None).cast("string"))
+
+    def cascade(toks: Column) -> Column:
+        quality = _quality(toks, text)["quality"]
+        repetition = _repetition(toks, text)["repetition"]
+        reason = (
+            F.when(text.isNull(), F.lit("too_short"))
+            .when(quality != "ok", quality)
+            .when(repetition == "repetitive", F.lit("repetitive"))
+        )
+        if allowed_langs is not None:
+            reason = reason.when(
+                ~lang_id(text).isin(*allowed_langs), F.lit("lang_blocked")
+            )
+        return reason.otherwise(F.lit(None).cast("string"))
+
+    return _let(tokens(text), cascade)
 
 
 def filter_corpus(
@@ -76,17 +88,20 @@ def filter_corpus(
 ) -> tuple[DataFrame, DataFrame]:
     """(clean, rejected): clean keeps the input schema unchanged;
     rejected is the dropped rows plus a ``reason`` column.  Together
-    they partition the input (every row lands in exactly one)."""
-    clash = {"__reason", "reason"} & set(docs.columns)
-    if clash:
+    they partition the input (every row lands in exactly one).
+
+    Each frame evaluates the cascade once per row.  ``rejected`` keeps
+    the row and its reason through one explode of the 0-or-1-element
+    array of non-NULL reasons: a ``where`` on a projected reason is
+    pushed below the projection and would evaluate the cascade twice."""
+    if "reason" in docs.columns:
         raise ValueError(
-            f"input columns {sorted(clash)} collide with the rejected "
-            "table's reason column; rename them first"
+            "input column 'reason' collides with the rejected table's "
+            "reason column; rename it first"
         )
     reason = rejection_reason(F.col(text_col), allowed_langs)
-    tagged = docs.withColumn("__reason", reason)
-    clean = tagged.where(F.col("__reason").isNull()).drop("__reason")
-    rejected = tagged.where(F.col("__reason").isNotNull()).withColumnRenamed(
-        "__reason", "reason"
+    clean = docs.where(reason.isNull())
+    rejected = docs.select(
+        "*", F.explode(F.array_compact(F.array(reason))).alias("reason")
     )
     return clean, rejected

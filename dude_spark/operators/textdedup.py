@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import tokens, word_ngrams
+from ..functions.text import _let, tokens, word_ngrams
 from ..session import ensure_min_partitions
 
 
@@ -143,21 +143,26 @@ def chunk_dedup(
     collapse to md5('') with n_kept = 0; empty documents survive with
     n_chunks = 0.
 
-    Scale shape: chunking is pure codegen (sequence + transform +
-    slice, no UDF); the dedup decision is ONE combinable min-struct
-    aggregate keyed by xxhash64(chunk) — 8-byte shuffle keys, never
-    the chunk text (a 64-bit collision merges two distinct chunks
-    with probability ~|chunks|²/2^64: the same documented contract as
-    the gram hashing above).  The rebuild is a per-document aggregate
+    Scale shape: chunking is pure JVM (sequence + transform + slice
+    over the token array bound once per row, no UDF); the dedup
+    decision is ONE combinable min-struct aggregate keyed by
+    xxhash64(chunk) — 8-byte shuffle keys, never the chunk text (a
+    64-bit collision merges two distinct chunks with probability
+    ~|chunks|²/2^64: the same documented contract as the gram hashing
+    above).  The rebuild is a per-document aggregate
     whose buffer is bounded by that document's own chunk count.
     """
     w = int(chunk_tokens)
-    toks = tokens(F.col(text_col))
-    n_chunks = F.ceil(F.size(toks) / F.lit(w)).cast("int")
-    chunk_at = lambda i: F.array_join(F.slice(toks, i * w + 1, w), " ")
-    chunks = F.when(
-        F.size(toks) > 0, F.transform(F.sequence(F.lit(0), n_chunks - 1), chunk_at)
-    ).otherwise(F.array().cast("array<string>"))
+
+    def chunk_all(toks):
+        n_chunks = F.ceil(F.size(toks) / F.lit(w)).cast("int")
+        chunk_at = lambda i: F.array_join(F.slice(toks, i * w + 1, w), " ")
+        return F.when(
+            F.size(toks) > 0,
+            F.transform(F.sequence(F.lit(0), n_chunks - 1), chunk_at),
+        ).otherwise(F.array().cast("array<string>"))
+
+    chunks = _let(tokens(F.col(text_col)), chunk_all)
     ex = ensure_min_partitions(
         docs.select(F.col(id_col).alias("doc"), F.col(text_col))
     ).select("doc", F.posexplode(chunks).alias("idx", "chunk"))
@@ -272,10 +277,10 @@ def dedup_lines(
     is paragraph-gap normalization, and the contract.
 
     Scale shape: ZERO shuffle — split / filter-with-index /
-    array_join are all JVM higher-order functions evaluated per row
-    inside whole-stage codegen, so the operator rides the scan like
-    the text-signal functions.  The first-occurrence test (one full-
-    array array_position per line, no prefix-array copies) is O(L²)
+    array_join are all JVM functions evaluated per row, so the
+    operator rides the scan like the text-signal functions.  The
+    first-occurrence test (one full-array array_position per line
+    over the split bound once, no prefix-array copies) is O(L²)
     element compares in a document's line count — at 10^3 lines that
     is ~10^6 cheap compares per doc, noise next to tokenizing the
     same doc; a pathological 10^6-line document wants the explode →
@@ -303,14 +308,15 @@ def _kept_lines(text, sep: str):
     The filter keeps element i iff the FULL array's first occurrence
     of its value is at position i+1 (1-based) — equivalent to a
     prefix search, with no per-element prefix-array copies: one
-    array_position scan per line, O(L²) element compares worst-case
-    but zero allocation beyond the split itself."""
+    array_position scan per line, O(L²) element compares worst-case.
+    The split is bound once (``_let``); captured in the lambda as an
+    expression it would be re-split for every line."""
     import re as _re
 
     lines = F.split(text, _re.escape(sep), -1)
-    kept = F.filter(
+    kept = _let(
         lines,
-        lambda x, i: F.array_position(lines, x) == i + 1,
+        lambda ls: F.filter(ls, lambda x, i: F.array_position(ls, x) == i + 1),
     )
     return lines, kept
 
@@ -321,6 +327,6 @@ def dedup_lines_text(text, sep: str = "\n"):
     a bare expression, for in-place corpus rewrites
     (``df.withColumn(text_col, dedup_lines_text(...))``) that keep
     the rest of the schema without an id join; NULL text stays NULL.
-    Zero shuffle: evaluates per row inside whole-stage codegen."""
+    Zero shuffle: evaluates per row."""
     _, kept = _kept_lines(text, sep)
     return F.array_join(kept, sep)

@@ -586,7 +586,9 @@ def start_incremental_dedup(
                     )
                 )
             )
-            pairs = verify_fn(pairs, rows).select("a", "b")
+            # distinct: a re-crawled id has a row in the batch and in
+            # the state, and the verify attach joins every copy
+            pairs = verify_fn(pairs, rows).select("a", "b").distinct()
         if assign_clusters:
             # the epoch's final pair table feeds the durable write AND
             # the incremental-assignment fold — materialize once

@@ -358,3 +358,29 @@ def test_ann_query_joins_broadcast_query_side(spark, tmp_path):
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "BroadcastHashJoin" in plan, plan
+
+
+def _optimized(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_text_signals_split_each_document_once(spark):
+    """The token array is bound once per row inside the expression:
+    neither a gram lambda nor the filter cascade's signals re-split the
+    document, and the filter's stopword test does no case mapping.
+    (Columns are aliased: an unaliased column's generated name would
+    repeat the expression text in the plan string.)"""
+    from dude_spark.functions.text import word_ngrams
+    from dude_spark.operators.filters import filter_corpus
+
+    docs = spark.createDataFrame(
+        [(0, "the cat sat on the mat"), (1, None)], "doc_id long, caption string"
+    )
+    clean, rejected = filter_corpus(docs, text_col="caption")
+    for df in (clean, rejected):
+        plan = _optimized(df)
+        assert plan.count("split(") == 1, plan
+        assert "lower(" not in plan, plan
+    grams = docs.select(word_ngrams(F.col("caption"), 5).alias("g"))
+    plan = _optimized(grams)
+    assert plan.count("split(") == 1, plan

@@ -151,3 +151,55 @@ def test_repetition_fold_matches_bruteforce_reference(spark):
     }
     for i, t in enumerate(docs):
         assert got[i] == ref(t), (i, repr(t), got[i], ref(t))
+
+
+# Unicode and case edge rows for the stopword match, with the values
+# the lowercase-then-match implementation gave: 'İ' lowercases to two
+# code points and the Kelvin sign (\u212a) to 'k', so neither makes a
+# stopword; Greek 'ΤΗΕ' and dotless 'ı' are not ASCII.  20-token rows
+# (_FILLER is 14 non-stopwords) reach the low_stopword/ok cut, where
+# one miscounted stopword flips the class.
+_FILLER = (
+    "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu nu xi"
+)
+_STOPWORD_EDGES = {
+    # text: (stopword_count, n_tokens, stop_x1000, quality, reason)
+    "İn the ıN THE tHe": (3, 5, 600, "too_short", "too_short"),
+    "ΤΗΕ the ǅ": (1, 3, 333, "too_short", "too_short"),
+    "\u212a": (0, 1, 0, "too_short", "too_short"),
+    "AND aNd Of oF": (4, 4, 1000, "too_short", "too_short"),
+    "": (0, 0, 0, "too_short", "too_short"),
+    "   ": (0, 0, 0, "too_short", "too_short"),
+    f"İn ıN \u212a ǅ ΤΗΕ {_FILLER} THE": (
+        1, 20, 50, "low_stopword", "low_stopword"
+    ),
+    f"İn ıN \u212a ǅ tHe {_FILLER} aNd": (2, 20, 100, "ok", None),
+}
+
+
+def test_stopword_case_forms_match_lowercase_semantics(spark):
+    from dude_spark.functions.text import stopword_count
+    from dude_spark.operators.filters import rejection_reason
+
+    df = spark.createDataFrame(
+        [(t,) for t in [*_STOPWORD_EDGES, None]], "text string"
+    )
+    t = F.col("text")
+    cols = quality_signals(t)
+    got = {
+        r["text"]: tuple(r)[1:]
+        for r in df.select(
+            "text",
+            stopword_count(t).alias("stop"),
+            *[c.alias(n) for n, c in cols],
+            rejection_reason(t).alias("reason"),
+        ).collect()
+    }
+    for text, (stop, n_tok, stop_pm, quality, reason) in _STOPWORD_EDGES.items():
+        r = got[text]
+        assert (r[0], r[1], r[2], r[4], r[5]) == (
+            stop, n_tok, stop_pm, quality, reason
+        ), text
+    # NULL text: NULL signals, quality falls through to ok, and the
+    # filter's explicit guard rejects it
+    assert got[None] == (None, None, None, None, "ok", "too_short")
