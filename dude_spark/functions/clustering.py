@@ -438,9 +438,9 @@ def semdedup_new(
     ~10^4 members), so it only fires when clustering is much coarser
     than the recipe; raise ``k`` or the cap when it does.  The cut is
     attached, never silent: the returned frame carries
-    ``.overcap_known`` (the collected pairs_vs_known cut rows) and
-    ``.overcap_within`` (the within-new grid's task-spread records,
-    which lose nothing).
+    ``.overcap_known`` (pairs_vs_known's pinned frame of the cut
+    clusters: bucket, bucket_size, bucket_min) and ``.overcap_within``
+    (the within-new grid's task-spread records, which lose nothing).
 
     An EMPTY known corpus (no rows, or no non-null embeddings) is
     refused loudly: returning zero pairs would silently skip the

@@ -48,28 +48,16 @@ from pyspark.sql import functions as F
 
 from ..functions.text import tokens, word_ngrams
 from ..session import ensure_min_partitions, pin
+from .candidates import pin_hot_keys
 
 # hot-set size above which the broadcast hint is dropped and the probe
 # joins as a shuffle join instead: boilerplate is small by definition,
 # but a low min_df on a near-dup-heavy 10^12-doc corpus can flag tens
 # of millions of grams — a broadcast that large belongs on the shuffle
 # path (both sides big means the data movement is genuinely required).
-# Probed with a bounded limit(cap+1).count(), the candidates/CC idiom.
+# Every hot set here is pinned and counted by candidates.pin_hot_keys,
+# which applies this cap; it is read at call time.
 BROADCAST_HOT_CAP = 2_000_000
-
-
-def _hot_join_side(hot: DataFrame, cap: int | None = None) -> DataFrame:
-    """``hot`` wrapped in a broadcast hint iff it is small enough.
-    The bounded probe is one extra action over the detection chain —
-    at corpus scale pass a MATERIALIZED ``hot_grams`` table into
-    strip_boilerplate (the CLI pattern) so the probe reads parquet,
-    not a recomputed shuffle.  ``cap`` resolves at call time so tests
-    can monkeypatch BROADCAST_HOT_CAP."""
-    if cap is None:
-        cap = BROADCAST_HOT_CAP
-    if hot.limit(cap + 1).count() <= cap:
-        return F.broadcast(hot)
-    return hot
 
 
 def _doc_grams(docs: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
@@ -115,18 +103,17 @@ def boilerplate_ngrams(
             f"min_df must be >= 2 (1 would flag every gram), got {min_df}"
         )
     doc_grams = _doc_grams(docs, id_col, text_col, n)
-    # lazy checkpoint: _hot_join_side's bounded probe is the first
-    # action through this plan, and it materializes the checkpoint —
-    # without it the probe AND the join's hot side each re-run the
-    # whole explode→hash→aggregate detection shuffle (measured 2.5×
-    # the single-pass wall at sf0.1)
-    hot = pin(_hot_hashes(doc_grams, min_df), eager=False)
+    # pinned: the count and the join's hot side read one detection
+    # pass — without the pin each re-runs the whole explode→hash→
+    # aggregate detection shuffle (measured 2.5× the single-pass wall
+    # at sf0.1)
+    _, hot, _ = pin_hot_keys(_hot_hashes(doc_grams, min_df), BROADCAST_HOT_CAP)
     # recover the strings map-side: re-explode, broadcast the hot hash
     # set, keep one row per (gram, df) — only hot gram strings shuffle
     # (through the distinct), and boilerplate is small by definition
     return (
         doc_grams.select("gram", F.xxhash64("gram").alias("gh"))
-        .join(_hot_join_side(hot), "gh")
+        .join(hot, "gh")
         .select("gram", "df")
         .distinct()
     )
@@ -158,20 +145,14 @@ def strip_boilerplate(
             f"min_df must be >= 2 (1 would strip every doc), got {min_df}"
         )
     if hot_grams is not None:
-        # caller-materialized table (the CLI pattern) — already cheap
-        # to re-read, no checkpoint copy needed
         hot = hot_grams.select(F.xxhash64("gram").alias("gh"))
     else:
-        # same single-detection-pass checkpoint as boilerplate_ngrams
-        hot = pin(
-            _hot_hashes(_doc_grams(docs, id_col, text_col, n), min_df),
-            eager=False,
-        )
+        hot = _hot_hashes(_doc_grams(docs, id_col, text_col, n), min_df)
+    _, hot, _ = pin_hot_keys(hot.select("gh"), BROADCAST_HOT_CAP)
 
     # all window positions this time (coverage removes every
     # occurrence); the broadcast join filters map-side, so the
     # per-doc collect_set aggregation only ever sees hot matches
-    toks = tokens(F.col(text_col))
     positions = (
         ensure_min_partitions(
             docs.select(F.col(id_col).alias("__doc"), F.col(text_col))
@@ -183,7 +164,7 @@ def strip_boilerplate(
             ),
         )
         .select("__doc", "pos", F.xxhash64("gram").alias("gh"))
-        .join(_hot_join_side(hot.select("gh")), "gh")
+        .join(hot, "gh")
         .groupBy("__doc")
         .agg(F.collect_set("pos").alias("__starts"))
     )
@@ -194,17 +175,20 @@ def strip_boilerplate(
     starts = F.coalesce(
         F.col("__starts"), F.array().cast("array<int>")
     )
-    kept = F.filter(
-        toks,
-        lambda t, i: ~F.exists(
-            starts, lambda s: (s <= i) & (i < s + F.lit(n))
-        ),
-    )
-    removed = (F.size(toks) - F.size(kept)).cast("long")
-    rewritten = joined.withColumn("__removed", removed).withColumn(
+
+    def covered(_, i):
+        return F.exists(starts, lambda s: (s <= i) & (i < s + F.lit(n)))
+
+    # each column reads the token array once: the removed count is the
+    # covered tokens, not len(tokens) - len(kept), so neither it nor
+    # the audit filter pushed down onto it re-splits the document
+    toks = tokens(F.col(text_col))
+    rewritten = joined.withColumn(
+        "__removed", F.size(F.filter(toks, covered)).cast("long")
+    ).withColumn(
         text_col,
         F.when(F.col("__starts").isNull(), F.col(text_col)).otherwise(
-            F.concat_ws(" ", kept)
+            F.concat_ws(" ", F.filter(toks, lambda t, i: ~covered(t, i)))
         ),
     )
     stripped = rewritten.select(*docs.columns)
@@ -329,7 +313,7 @@ def strip_common_lines(
     Scale shape: df detection is one 8-byte-key combine shuffle over
     per-doc-distinct line hashes (countDistinct doc — the _hot_hashes
     double-ingest rationale); the hot set joins back broadcast-or-
-    shuffle via ``_hot_join_side``; the rewrite is the chunk_dedup
+    shuffle via ``candidates.pin_hot_keys``; the rewrite is the chunk_dedup
     explode → left_anti → per-doc rebuild, whose aggregation buffer
     is bounded by each doc's own line count.  Hash-collision
     contract as everywhere: a 64-bit collision can only remove one
@@ -341,12 +325,11 @@ def strip_common_lines(
     if min_df < 2:
         raise ValueError(f"min_df must be >= 2, got {min_df}")
     base = docs.select(F.col(id_col).alias("_id"), F.col(text_col))
-    # lazy checkpoints (the boilerplate_ngrams rationale, measured
+    # lazy checkpoint (the boilerplate_ngrams rationale, measured
     # there at 2.5x): `lines` feeds THREE consumers (the df detection
     # chain, the per-doc stats aggregate, the anti-join's probe side)
-    # and `hot` is consumed by _hot_join_side's EAGER size probe AND
-    # the join itself — without pinning, each consumer re-runs the
-    # scan -> split -> explode (and the detection shuffle) from scratch
+    # — without pinning, each consumer re-runs the scan -> split ->
+    # explode from scratch
     lines = pin(
         ensure_min_partitions(base).select(
             "_id",
@@ -356,7 +339,7 @@ def strip_common_lines(
         ).withColumn("_lh", F.xxhash64("_line")),
         eager=False,
     )
-    hot = pin(
+    _, hot, _ = pin_hot_keys(
         lines.where(F.trim(F.col("_line")) != "")
         .select("_id", "_lh")
         .distinct()
@@ -364,9 +347,9 @@ def strip_common_lines(
         .agg(F.countDistinct("_id").cast("long").alias("_df"))
         .where(F.col("_df") >= min_df)
         .select("_lh"),
-        eager=False,
+        BROADCAST_HOT_CAP,
     )
-    kept = lines.join(_hot_join_side(hot), "_lh", "left_anti")
+    kept = lines.join(hot, "_lh", "left_anti")
     stats = lines.groupBy("_id").agg(F.count("*").cast("long").alias("n_lines"))
     reb = kept.groupBy("_id").agg(
         F.count("*").cast("long").alias("_n_kept"),

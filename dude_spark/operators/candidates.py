@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import pin
+
 
 def overcap_stats(buckets: DataFrame, bucket_cap: int) -> DataFrame:
     """(bucket, bucket_size, bucket_min) for every over-cap bucket —
@@ -47,13 +49,36 @@ def overcap_stats(buckets: DataFrame, bucket_cap: int) -> DataFrame:
 # universal bucket at corpus scale is an impossible job, not a slow one.
 _MAX_EXHAUSTIVE_PAIRS = 1_000_000_000
 
-# Over-cap buckets collect to the driver only up to this many rows
-# (the skew plan wants them broadcast anyway); above it — a corpus
-# where a large share of ALL buckets overflows, i.e. the cap/detector
-# selectivity mismatches the data — the plan falls back to deriving
-# hot-key frames DISTRIBUTEDLY (plain joins, no driver
-# materialization), so the driver never holds an unbounded row list.
-_MAX_COLLECTED_OVERCAP = 100_000
+# Hot-key tables up to this many rows join broadcast; above it they
+# join as plain shuffle joins (the cap/detector selectivity mismatches
+# the corpus, and nothing is materialized on the driver either way).
+# It is also the refusal bound of pairs_vs_known's KNOWN side, where
+# that many over-cap buckets would be paid again by every batch.
+_MAX_BROADCAST_HOT_KEYS = 100_000
+
+
+def pin_hot_keys(
+    hot: DataFrame, cap: int | None = None
+) -> tuple[DataFrame, DataFrame, int]:
+    """Pin a hot-key table and count it — the one skew-cut step every
+    hot-key site shares (over-cap buckets here, hot grams in textdedup
+    and boilerplate).
+
+    Returns ``(table, join_side, n)``: ``table`` is the pinned frame,
+    read by the over-cap record (it is never recomputed, and it is a
+    JVM scan, not a Python-built frame); ``join_side`` is the same
+    frame hinted broadcast iff ``n <= cap`` (a larger table joins on
+    the shuffle path; ``cap`` defaults to ``_MAX_BROADCAST_HOT_KEYS``,
+    read at call time); ``n`` is its row count.  The pin is lazy
+    (``session.pin(eager=False)``) and the count is the one action that
+    materializes it.  Join sites use ``join_side`` only inside joins:
+    a hint on a frame that is written or unioned is not part of a join
+    relation, and Spark logs a warning for it."""
+    if cap is None:
+        cap = _MAX_BROADCAST_HOT_KEYS
+    table = pin(hot, eager=False)
+    n = table.count()
+    return table, F.broadcast(table) if n <= cap else table, n
 
 
 def pairs_from_buckets(
@@ -85,88 +110,50 @@ def pairs_from_buckets(
       instead of dropping it (and ``overcap`` still records which
       buckets paid it).
 
-    EAGER: calling this runs one Spark action (the map-side-combinable
-    over-cap detection aggregate, collected — tiny by construction),
-    which then selects between two static plans: the no-skew fast path
-    (one window shuffle, measured ~2× faster end-to-end than the
+    EAGER: calling this pins the over-cap detection aggregate and
+    counts it (:func:`pin_hot_keys`, one action; exhaustive mode adds
+    a one-row cost-guard aggregate over the pinned table).  The count
+    selects between two static plans: the no-skew fast path (one
+    window shuffle, measured ~2× faster end-to-end than the
     always-broadcast shape at n=600k because the fat exploded bucket
-    table is scanned once, not three times) and the skewed path
-    (broadcast star edges or the salted grid for the collected hot
-    keys, window for the rest).  ``overcap`` is built from the
-    collected rows — reading it costs nothing.
+    table is scanned once, not three times) and the skewed path (star
+    edges or the salted grid for the hot keys, joined broadcast up to
+    ``_MAX_BROADCAST_HOT_KEYS`` of them, window for the rest).
+    ``overcap`` reads the pinned table — it costs a scan of the
+    materialized rows, never the detection shuffle again.
     """
     if overcap_mode not in ("star", "exhaustive"):
         raise ValueError(f"unknown overcap_mode: {overcap_mode!r}")
     b = buckets.where(F.col("bucket").isNotNull())
-    spark = buckets.sparkSession
 
     # ADAPTIVE skew handling, zero extra passes when there is no skew.
     # The over-cap detection is the (count, min) aggregation the
     # durable overcap record needs anyway — map-side combinable, so a
-    # hot key costs each map partition one combined row — collected
-    # EAGERLY here (tiny by construction: the cap exists to defuse a
-    # handful of pathological keys; a corpus where a large share of
-    # buckets overflows needs a larger cap, and the record makes that
-    # visible, never silent).
-    hot_stats = overcap_stats(b, bucket_cap)
-    overcap_rows = hot_stats.limit(_MAX_COLLECTED_OVERCAP + 1).collect()
-    few_hot = len(overcap_rows) <= _MAX_COLLECTED_OVERCAP
-    if few_hot:
-        overcap_out = spark.createDataFrame(
-            [(r["bucket"], r["bucket_size"]) for r in overcap_rows],
-            schema=b.select(
-                "bucket", F.lit(0).cast("long").alias("bucket_size")
-            ).schema,
-        )
-        # (bucket, bucket_size, bucket_min) for the skew plan — tiny,
-        # broadcast (the normal skew regime: a handful of hot keys)
-        hot_df = F.broadcast(
-            spark.createDataFrame(
-                [
-                    (r["bucket"], r["bucket_size"], r["bucket_min"])
-                    for r in overcap_rows
-                ],
-                schema=hot_stats.schema,
-            )
-        ) if overcap_rows else None
-    else:
-        # Pathological regime: >100k over-cap buckets means the cap /
-        # detector selectivity mismatches the corpus — still a
-        # computable job for star semantics, so dedupe it
-        # distributedly: hot-key frames stay DataFrames (plain joins,
-        # no broadcast, nothing materialized on the driver).
-        overcap_out = hot_stats.select("bucket", "bucket_size")
-        hot_df = hot_stats
+    # hot key costs each map partition one combined row.  A corpus
+    # where a large share of buckets overflows needs a larger cap, and
+    # the record makes that visible, never silent.
+    hot_stats, hot_df, n_hot = pin_hot_keys(overcap_stats(b, bucket_cap))
+    overcap_out = hot_stats.select("bucket", "bucket_size")
 
-    if hot_df is not None:
-        # Skewed input: hot rows leave the window path through a
-        # broadcast join of the collected keys — the 10^8-row hot
-        # bucket never streams through a single WindowExec task
-        # (round-1 VERDICT "what's wrong" #7) — and are removed
-        # map-side before the window.  Only actually-skewed inputs
-        # pay these extra scans.
+    if n_hot:
+        # Skewed input: hot rows leave the window path through a join
+        # of the hot keys — the 10^8-row hot bucket never streams
+        # through a single WindowExec task (round-1 VERDICT "what's
+        # wrong" #7) — and are removed map-side before the window.
+        # Only actually-skewed inputs pay these extra scans.
         if overcap_mode == "exhaustive":
             # Cost guard: exhaustive pair semantics is intrinsically
             # quadratic, and a universal bucket (boilerplate text
             # shared by 10^8 docs) means 10^15+ pairs — a job that
-            # should be REFUSED loudly, not launched.  With few hot
-            # keys the rows are already on the driver (bound is
-            # free); in the pathological many-hot-keys regime it is
-            # one 1-row aggregate action.
-            if few_hot:
-                grid_pairs = sum(
-                    r["bucket_size"] * (r["bucket_size"] - 1) // 2
-                    for r in overcap_rows
-                )
-                worst_size = max(r["bucket_size"] for r in overcap_rows)
-            else:
-                agg = hot_stats.agg(
-                    F.sum(
-                        F.col("bucket_size") * (F.col("bucket_size") - 1) / 2
-                    ).alias("p"),
-                    F.max("bucket_size").alias("w"),
-                ).collect()[0]
-                grid_pairs, worst_size = int(agg["p"]), agg["w"]
+            # should be REFUSED loudly, not launched.  One 1-row
+            # aggregate over the pinned hot table.
+            agg = hot_stats.agg(
+                F.sum(
+                    F.col("bucket_size") * (F.col("bucket_size") - 1) / 2
+                ).alias("p"),
+                F.max("bucket_size").alias("w"),
+            ).first()
+            grid_pairs, worst_size = int(agg["p"]), agg["w"]
             if grid_pairs > _MAX_EXHAUSTIVE_PAIRS:
                 raise ValueError(
                     f"exhaustive over-cap pairing would emit "
@@ -275,7 +262,7 @@ def pairs_vs_known(
     known_buckets: DataFrame,
     bucket_cap: int = 64,
     context: str = "cross-corpus join",
-) -> tuple[DataFrame, list]:
+) -> tuple[DataFrame, DataFrame]:
     """(a=known_id, b=new_id) bucket-equi pairs of a NEW batch against
     an already-processed KNOWN corpus — the incremental-dedup join the
     streaming path runs every micro-batch, exposed for batch callers.
@@ -293,50 +280,44 @@ def pairs_vs_known(
     combinable ``overcap_stats`` aggregate, so one pathological bucket
     never owns a single fat task.  Connectivity is preserved (every
     new member still pairs with the known component's anchor).  The
-    cut is RECORDED, never silent: returns ``(pairs, overcap_rows)``
-    with one collected Row(bucket, bucket_size, bucket_min) per capped
-    bucket for the caller's lineage sink.  More than
-    ``_MAX_COLLECTED_OVERCAP`` capped buckets means the cap/detector
-    selectivity mismatches the corpus and EVERY batch would pay it —
-    refused loudly rather than OOMing the driver.
+    cut is RECORDED, never silent: returns ``(pairs, overcap)`` where
+    ``overcap`` is the pinned (bucket, bucket_size, bucket_min) frame,
+    one row per capped bucket, for the caller's lineage sink.  More
+    than ``_MAX_BROADCAST_HOT_KEYS`` capped buckets means the
+    cap/detector selectivity mismatches the corpus and EVERY batch
+    would pay it — refused loudly (the known side is outside input).
 
     Scale shape: the known side is first restricted to the batch's
     distinct buckets (broadcast of O(batch) keys at typical sizes,
     AQE picks the side), so the multi-TB known table is probed, never
-    fully paired; the skew aggregate is collected eagerly so the pairs
-    action scans the known table ONCE, not once per lazy reference.
+    fully paired; the skew aggregate is pinned and counted eagerly
+    (:func:`pin_hot_keys`), so the pairs action reads the hot table
+    from the pin instead of re-running the known-side aggregate.
     """
-    spark = new_buckets.sparkSession
     known = known_buckets.select(
         F.col("image_id").alias("known_id"), "bucket"
     )
     batch_bkts = new_buckets.select("bucket").distinct()
     known_hit = known.join(batch_bkts, "bucket")
-    overcap_rows = (
+    overcap, hot, n_hot = pin_hot_keys(
         overcap_stats(
             known_hit.select(F.col("known_id").alias("image_id"), "bucket"),
             bucket_cap,
         )
-        .limit(_MAX_COLLECTED_OVERCAP + 1)
-        .collect()
     )
-    if len(overcap_rows) > _MAX_COLLECTED_OVERCAP:
+    if n_hot > _MAX_BROADCAST_HOT_KEYS:
         raise ValueError(
-            f"{context} touches over {_MAX_COLLECTED_OVERCAP:,} over-cap "
+            f"{context} touches over {_MAX_BROADCAST_HOT_KEYS:,} over-cap "
             "KNOWN buckets — bucket_cap / detector selectivity mismatches "
             "this corpus; raise bucket_cap or use a more selective "
             "detector config"
         )
-    if overcap_rows:
-        hot_reps = F.broadcast(
-            spark.createDataFrame(
-                [(r["bucket"], r["bucket_min"]) for r in overcap_rows],
-                schema=known_hit.select("bucket", "known_id").schema,
-            )
-        )
+    if n_hot:
         join_side = known_hit.join(
-            hot_reps.select("bucket"), "bucket", "left_anti"
-        ).unionByName(hot_reps.select("bucket", "known_id"))
+            hot.select("bucket"), "bucket", "left_anti"
+        ).unionByName(
+            overcap.select("bucket", F.col("bucket_min").alias("known_id"))
+        )
     else:
         join_side = known_hit
     pairs = (
@@ -345,7 +326,7 @@ def pairs_vs_known(
         .where(F.col("known_id") != F.col("new_id"))
         .select(F.col("known_id").alias("a"), F.col("new_id").alias("b"))
     )
-    return pairs, overcap_rows
+    return pairs, overcap
 
 
 def cross_corpus_pairs(
@@ -370,26 +351,29 @@ def cross_corpus_pairs(
     mechanisms record, never silently truncate.  Pair orientation:
     within-new pairs are (a<b); cross pairs are (a=known, b=new);
     callers needing one namespace normalize with least/greatest.
+
+    Re-crawls: a new row SUPERSEDES the known rows of its image_id —
+    known rows whose image_id is in the new batch do not join (the
+    reference re-hashes a re-ingested file and upserts its cache row,
+    hashing.go:84-88, db/hash_repository.go:128-143).  So an id on
+    both sides pairs only through its new row, and no pair comes back
+    in both orientations.
     """
-    if known_buckets is not None:
-        vs_known, known_rows = pairs_vs_known(
-            new_buckets, known_buckets, bucket_cap
-        )
-    else:
-        vs_known, known_rows = None, []
     vs_new, overcap_batch = pairs_from_buckets(
         new_buckets, bucket_cap, overcap_mode
     )
     overcap = overcap_batch.select(
         "bucket", "bucket_size", F.lit("batch").alias("side")
     )
-    if known_rows:
-        spark = new_buckets.sparkSession
-        overcap = overcap.unionByName(
-            spark.createDataFrame(
-                [(r["bucket"], r["bucket_size"], "known") for r in known_rows],
-                schema=overcap.schema,
-            )
+    if known_buckets is None:
+        return vs_new, overcap
+    current = known_buckets.join(
+        new_buckets.select("image_id"), "image_id", "left_anti"
+    )
+    vs_known, overcap_known = pairs_vs_known(new_buckets, current, bucket_cap)
+    overcap = overcap.unionByName(
+        overcap_known.select(
+            "bucket", "bucket_size", F.lit("known").alias("side")
         )
-    pairs = vs_new if vs_known is None else vs_new.unionByName(vs_known)
-    return pairs.distinct(), overcap
+    )
+    return vs_new.unionByName(vs_known).distinct(), overcap

@@ -97,8 +97,6 @@ def _driver_components(edges: DataFrame) -> DataFrame:
         ]
     )
     pdf = edges.toPandas()
-    if pdf.empty:
-        return spark.createDataFrame([], schema=out_schema)
     codes, uniques = pd.factorize(pd.concat([pdf["a"], pdf["b"]]), sort=False)
     m = len(pdf)
     parent = list(range(len(uniques)))

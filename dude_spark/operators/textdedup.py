@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import _let, tokens, word_ngrams
 from ..session import ensure_min_partitions
+from .candidates import pin_hot_keys
 
 
 def _doc_grams(
@@ -73,14 +74,20 @@ def _cut_hot_grams(
     bucket cap); returns (grams, n_dropped).  Single-sourced for the
     jaccard and containment siblings so the cut's semantics (distinct
     -doc df, the eager count, the left_anti) can never diverge
-    between them.  The count is one eager job — the cut is never
-    silent (SURVEY.md §2.2 rule)."""
+    between them.  The hot table is pinned and counted once
+    (``candidates.pin_hot_keys``) — the cut is never silent (SURVEY.md
+    §2.2 rule) — and with no hot gram there is no anti-join at all."""
     if max_gram_df is None:
         return grams, 0
-    df_counts = grams.groupBy("gram").agg(F.countDistinct("doc").alias("df"))
-    hot = df_counts.where(F.col("df") > max_gram_df)
-    dropped = hot.count()
-    return grams.join(hot.select("gram"), "gram", "left_anti"), dropped
+    _, hot, dropped = pin_hot_keys(
+        grams.groupBy("gram")
+        .agg(F.countDistinct("doc").alias("df"))
+        .where(F.col("df") > max_gram_df)
+        .select("gram")
+    )
+    if dropped:
+        grams = grams.join(hot, "gram", "left_anti")
+    return grams, dropped
 
 
 def ngram_jaccard_pairs(

@@ -297,10 +297,10 @@ def run_pipeline(
                 chain.buckets(sigs_enc, dcfg), cfg.bucket_cap
             )
             # durable record of capped buckets — never silently
-            # truncated (SURVEY §2.2).  The overcap aggregate is its
-            # own map-side-combinable job; no persist is shared with
-            # the pairs write (its shuffle volume is one combined row
-            # per map partition per hot bucket — noise).
+            # truncated (SURVEY §2.2).  pairs_from_buckets pinned and
+            # counted the over-cap aggregate, so this write scans the
+            # pinned rows; it re-runs neither the detection shuffle
+            # nor any Python task.
             st.store.write(overcap, f"overcap_{det}")
             return pairs
 

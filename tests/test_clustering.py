@@ -280,7 +280,8 @@ class TestSemDedupNew:
             threshold_x1000=990, cluster_cap=8,
         )
         out.collect()
-        assert out.overcap_known and out.overcap_known[0]["bucket_size"] == 30
+        known_cut = out.overcap_known.collect()
+        assert known_cut and known_cut[0]["bucket_size"] == 30
         assert hasattr(out, "overcap_within")
 
     def test_overlapping_id_namespaces_refused(self, spark):

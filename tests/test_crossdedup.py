@@ -63,7 +63,9 @@ def test_known_hot_bucket_min_rep_cap(spark):
     )
     got = {(r["a"], r["b"]) for r in pairs.collect()}
     assert got == {("k000", "n1"), ("kc1", "n2"), ("kc2", "n2")}
-    assert [(r["bucket"], r["bucket_size"]) for r in rows] == [("hot", 100)]
+    assert [(r["bucket"], r["bucket_size"]) for r in rows.collect()] == [
+        ("hot", 100)
+    ]
 
 
 def test_cross_corpus_overcap_sides_recorded(spark):
@@ -91,7 +93,7 @@ def test_pairs_vs_known_refuses_overcap_flood(spark, monkeypatch):
     refusal naming the config mismatch, not a silent OOM."""
     import dude_spark.operators.candidates as cand
 
-    monkeypatch.setattr(cand, "_MAX_COLLECTED_OVERCAP", 2)
+    monkeypatch.setattr(cand, "_MAX_BROADCAST_HOT_KEYS", 2)
     known = [(f"k{i}_{j}", f"b{i}") for i in range(4) for j in range(5)]
     new = [(f"n{i}", f"b{i}") for i in range(4)]
     with pytest.raises(ValueError, match="over-cap KNOWN buckets"):

@@ -182,7 +182,7 @@ def test_whole_stage_codegen_covers_bucket_path(parquet_images):
 
 
 def test_many_overcap_buckets_distributed_fallback(spark, monkeypatch):
-    """Above _MAX_COLLECTED_OVERCAP over-cap buckets (cap/selectivity
+    """Above _MAX_BROADCAST_HOT_KEYS over-cap buckets (cap/selectivity
     mismatching the corpus), the skew plan must not materialize the
     hot-key list on the driver — hot frames join distributedly — and
     both modes' outputs stay identical to the broadcast plan's."""
@@ -208,7 +208,7 @@ def test_many_overcap_buckets_distributed_fallback(spark, monkeypatch):
         )
 
     expected = {m: run(m) for m in ("star", "exhaustive")}
-    monkeypatch.setattr(candidates, "_MAX_COLLECTED_OVERCAP", 3)
+    monkeypatch.setattr(candidates, "_MAX_BROADCAST_HOT_KEYS", 3)
     for m in ("star", "exhaustive"):
         got_pairs, got_overcap = run(m)
         assert got_pairs == expected[m][0]
@@ -384,3 +384,85 @@ def test_text_signals_split_each_document_once(spark):
     grams = docs.select(word_ngrams(F.col("caption"), 5).alias("g"))
     plan = _optimized(grams)
     assert plan.count("split(") == 1, plan
+
+
+def test_boilerplate_strip_splits_each_document_once_per_node(spark):
+    """strip_boilerplate's audit counts the covered tokens, so its
+    Project and the Filter pushed down onto it split the document once
+    each (the positions Generate splits it once more, for the grams)."""
+    from dude_spark.operators.boilerplate import strip_boilerplate
+
+    docs = spark.createDataFrame(
+        [(i, f"alpha beta gamma delta epsilon x{i}") for i in range(4)],
+        "doc_id long, text string",
+    )
+    _, audit = strip_boilerplate(docs, n=3, min_df=2)
+    plan = _optimized(audit)
+    splits = {}
+    for line in plan.splitlines():
+        node = line.lstrip(" :+-").split(" ", 1)[0]
+        splits.setdefault(node, []).append(line.count("split("))
+    assert max(splits["Project"]) <= 1 and max(splits["Filter"]) <= 1, plan
+    assert plan.count("split(") == 3, plan
+
+
+def _hinted(df) -> bool:
+    return "strategy=broadcast" in df._jdf.queryExecution().analyzed().toString()
+
+
+def test_pin_hot_keys_counts_once_and_hints_iff_under_cap(spark, monkeypatch):
+    """The one hot-key step: a single action (the count) materializes
+    the pin; the join side is hinted broadcast iff the count is at most
+    the cap (the default cap is read at call time); the table the
+    over-cap record reads is unhinted and is a scan of the pinned rows,
+    not the aggregate run again."""
+    from dude_spark.operators import candidates
+
+    hot = spark.range(70).groupBy((F.col("id") % 7).alias("k")).count()
+    actions = []
+    with monkeypatch.context() as m:
+        cls = type(hot)
+        for name in ("count", "collect", "first", "head", "take", "toPandas"):
+            def spy(self, *a, _orig=getattr(cls, name), _name=name, **k):
+                actions.append(_name)
+                return _orig(self, *a, **k)
+
+            m.setattr(cls, name, spy)
+        table, join, n = candidates.pin_hot_keys(hot, cap=7)
+    assert (n, actions) == (7, ["count"])
+    assert _hinted(join) and not _hinted(table)
+    plan = table._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" in plan and "Aggregate" not in plan, plan
+    assert sorted(r["k"] for r in table.collect()) == list(range(7))
+
+    table, join, n = candidates.pin_hot_keys(hot, cap=6)
+    assert n == 7 and join is table and not _hinted(join)
+    monkeypatch.setattr(candidates, "_MAX_BROADCAST_HOT_KEYS", 6)
+    assert not _hinted(candidates.pin_hot_keys(hot)[1])
+
+
+def test_operators_build_no_frames_from_python_lists():
+    """A createDataFrame over a Python list is a Python RDD: every
+    action over it starts Python tasks.  No operator builds one, and
+    the candidate operators collect nothing to the driver."""
+    import ast
+    import pathlib
+
+    import dude_spark.operators as ops
+
+    literal = (ast.List, ast.Tuple, ast.ListComp, ast.GeneratorExp)
+    found = []
+    for path in sorted(pathlib.Path(ops.__file__).parent.glob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not (
+                isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+            ):
+                continue
+            data = node.args[0] if node.args else next(
+                (k.value for k in node.keywords if k.arg == "data"), None
+            )
+            if node.func.attr == "createDataFrame" and isinstance(data, literal):
+                found.append(f"{path.name}:{node.lineno} createDataFrame")
+            if node.func.attr == "collect" and path.name == "candidates.py":
+                found.append(f"{path.name}:{node.lineno} collect")
+    assert not found, found

@@ -1,6 +1,7 @@
 """A re-crawl — an image_id present in both the known corpus and the new
 batch — must not multiply the written pair rows: `dedup-new` and the
-ingest stream write each verified pair once."""
+ingest stream write each verified pair once, in one orientation (the
+new row of a re-crawled id supersedes its known row)."""
 
 from __future__ import annotations
 
@@ -8,6 +9,7 @@ import os
 
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from dude_spark import cli
 from dude_spark.config import MinHashConfig
@@ -29,10 +31,13 @@ def batches(fixture_pdf):
 
 
 def _rows_and_pairs(df):
-    return df.count(), df.select("a", "b").distinct().count()
+    """(rows, distinct unordered pairs): equal iff no pair is written
+    twice, in either orientation."""
+    unordered = df.select(F.least("a", "b"), F.greatest("a", "b"))
+    return df.count(), unordered.distinct().count()
 
 
-@pytest.mark.parametrize("detector", ["minhash", "suffix"])
+@pytest.mark.parametrize("detector", ["exact", "minhash", "simhash", "suffix"])
 def test_dedup_new_writes_each_pair_once(
     spark, tmp_path, monkeypatch, batches, detector
 ):
